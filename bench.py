@@ -32,28 +32,29 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 os.environ.setdefault("WBX_INPUT_PARTITIONS", str(2 * CPUS))
 
 
-def get_session():
-    from pyspark.sql import SparkSession
+def _half_ram() -> str:
+    """Half of MemTotal, in MiB, as a JVM size: the default driver heap
+    must fit the host and leave room for the Python workers."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{kib // 2048}m"
 
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("wbx-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.default.parallelism", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # archive rows are fat (MBs of binary); small scan splits keep the
-        # mapInPandas parse fanned out without an explicit (and untimed-
-        # unrealistic) repartition shuffle of the payload bytes
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        # keep in sync with wbx/session.py: constraint propagation inlines
-        # the canonicalize tree into inferred IsNotNull filters → 64 KB
-        # codegen overflow → the frontier stage silently runs interpreted
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+
+def get_session():
+    from wbx.session import get_spark
+
+    return get_spark(
+        app_name="wbx-bench",
+        cores=CPUS,
+        shuffle_partitions=CPUS,
+        extra_conf={
+            # archive rows are fat (MBs of binary); small scan splits keep
+            # the mapInPandas parse fanned out without an explicit (and
+            # untimed-unrealistic) repartition shuffle of the payload bytes
+            "spark.sql.files.maxPartitionBytes": "8m",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_ram()),
+        },
     )
 
 

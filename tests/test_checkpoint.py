@@ -351,3 +351,34 @@ class TestCrawlReport:
             assert dead["seen_added"] == 0
             assert dead["n_hosts"] == 0
             assert dead["top_host"] is None
+
+    def test_report_skips_uncommitted_round_gaps(self, spark, tmp_path):
+        """A store with rounds 1 and 3 committed (no round 2) reports
+        exactly those rounds — never a fabricated zero row for round 2 —
+        and a round directory published past the manifest (a crash before
+        the manifest swap) stays invisible."""
+        from wbx.checkpoint import crawl_report
+
+        store = CheckpointStore(str(tmp_path / "gaps"))
+
+        def tables(rid, n):
+            return {
+                "metrics": spark.createDataFrame(
+                    [(rid, 0, "urls_scheduled", float(n)), (rid, 0, "seen_added", float(n))],
+                    "round int, partition_id int, metric string, value double",
+                ),
+                "fetch_log": spark.createDataFrame(
+                    [(rid, "h0.com", f"http://h0.com/{rid}/{i}") for i in range(n)],
+                    "round int, host string, canon_url string",
+                ),
+            }
+
+        store.commit(1, tables(1, 2))
+        store.commit(3, tables(3, 5))
+        # round 4 published by a writer that died before the manifest swap
+        for name, df in tables(4, 7).items():
+            df.write.parquet(os.path.join(store.base, "rounds", "r000004", name))
+        rows = {r["round"]: r for r in crawl_report(spark, store).collect()}
+        assert set(rows) == {1, 3}
+        assert rows[1]["urls_scheduled"] == 2 and rows[3]["urls_scheduled"] == 5
+        assert rows[3]["n_hosts"] == 1 and rows[3]["top_host"] == "h0.com"

@@ -225,6 +225,16 @@ class TestDedupExchangeCarriesNoText:
             assert "text#" not in b, b
 
 
+def _crawl_fixture(spark):
+    cand = spark.createDataFrame(
+        [(f"http://H{i % 5}.com:80/p{i}#x", float(i)) for i in range(60)],
+        "url string, priority double",
+    )
+    seen = spark.createDataFrame([], "url_hash long, canon_url string")
+    hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
+    return cand, seen, hosts
+
+
 class TestFrontierCodegen:
     def test_crawl_round_compiles_under_forced_codegen(self, spark):
         """The frontier's hot stage must stay inside whole-stage codegen:
@@ -242,12 +252,7 @@ class TestFrontierCodegen:
         for k, v in confs.items():
             spark.conf.set(k, v)
         try:
-            cand = spark.createDataFrame(
-                [(f"http://H{i % 5}.com:80/p{i}#x", float(i)) for i in range(60)],
-                "url string, priority double",
-            )
-            seen = spark.createDataFrame([], "url_hash long, canon_url string")
-            hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
+            cand, seen, hosts = _crawl_fixture(spark)
             got = frontier.crawl_round(cand, seen, hosts, batch_size=20).collect()
             assert len(got) == 20
         finally:
@@ -262,6 +267,109 @@ class TestFrontierCodegen:
         # the session factory must keep this off (see wbx/session.py) —
         # re-enabling it silently reintroduces the interpreted fallback
         assert spark.conf.get("spark.sql.constraintPropagation.enabled") == "false"
+
+    def test_codegen_cache_sized_for_working_set(self, spark):
+        # static conf set by the session factory (see wbx/session.py): at
+        # Spark's default of 100 a warm archive-query pass recompiled 25-45
+        # classes and a run_crawl round 40-85
+        assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+class TestCodegenCacheReuse:
+    """A warm repeat of a query must reuse Spark's generated classes: each
+    recompile costs Janino, class loading and a fresh JIT warm-up. Counts
+    come from Spark's codegen metrics (one tick per compiled class)."""
+
+    @staticmethod
+    def _compiles(spark) -> int:
+        cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return cm.METRIC_COMPILATION_TIME().getCount()
+
+    def _second_pass_compiles(self, spark, run) -> int:
+        run()
+        before = self._compiles(spark)
+        run()
+        return self._compiles(spark) - before
+
+    def test_archive_query_surface_second_pass_compiles_nothing(self, spark, tmp_path):
+        from wbx import warcio
+        from wbx.analytics import cdx_index, compare_headers, match_pairs, summarize
+        from wbx.fixtures import synth_warc_files_rich
+
+        docs = _docs(spark).limit(40)
+        revised = docs.filter(F.col("doc_id") % 10 != 0).withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 10 == 1, F.concat("text", F.lit(" Revised."))
+            ).otherwise(F.col("text")),
+        )
+        files_a = synth_warc_files_rich(docs, n_files=4).cache()
+        files_b = synth_warc_files_rich(revised, n_files=4).cache()
+        columns = [
+            "source_file", "member_start", "member_end", "record_start",
+            "record_end", "headers", "warc_type", "target_uri", "warc_date",
+            "content_type", "content_block", "http_status", "http_content_type",
+        ]
+        outs = []
+
+        def run():
+            out = warcio.scan_files_to_text(files_a).filter(
+                F.col("warc_type") == "response"
+            ).select("target_uri", "text").collect()
+            recs_a = warcio.scan_files_to_records(files_a, columns=columns).persist()
+            recs_b = warcio.scan_files_to_records(files_b, columns=columns).persist()
+            out += [v.collect() for v in summarize(recs_a).values()]
+            out += summarize(recs_b)["record_count"].collect()
+            out += match_pairs(recs_a).groupBy("pair_type").count().collect()
+            out += compare_headers(recs_a, recs_b).groupBy("status").count().collect()
+            path = str(tmp_path / f"cdx{len(outs)}")
+            cdx_index(recs_a).write.parquet(path)
+            out.append(spark.read.parquet(path).count())
+            recs_a.unpersist()
+            recs_b.unpersist()
+            outs.append(out)
+
+        try:
+            assert self._second_pass_compiles(spark, run) == 0
+        finally:
+            files_a.unpersist()
+            files_b.unpersist()
+        assert outs[0] == outs[1]
+
+    def test_crawl_round_second_call_compiles_nothing(self, spark):
+        from wbx import frontier
+
+        cand, seen, hosts = _crawl_fixture(spark)
+        try:
+            assert self._second_pass_compiles(
+                spark,
+                lambda: frontier.crawl_round(cand, seen, hosts, batch_size=20).collect(),
+            ) == 0
+        finally:
+            frontier.release_rank_caches()
+
+
+class TestRankCacheRegistry:
+    def test_repeated_rounds_keep_reading_the_rank_cache(self, spark):
+        """Identical crawl_round calls share ONE CacheManager entry for the
+        rank input; past the registry's FIFO cap, evicting an older twin
+        must not unpersist the entry the live round reads (which made every
+        later round recompute canonicalize → anti-join → robots →
+        politeness once per consumer of the rank input)."""
+        from wbx import frontier
+
+        cand, seen, hosts = _crawl_fixture(spark)
+        runs = []
+        try:
+            for _ in range(frontier._RANK_CACHE_CAP + 2):
+                batch = frontier.crawl_round(cand, seen, hosts, batch_size=20)
+                runs.append(sorted(map(tuple, batch.collect())))
+            assert "InMemoryRelation" in plan_str(batch, "extended")
+            assert len(frontier._RANK_CACHES) < frontier._RANK_CACHE_CAP
+        finally:
+            frontier.release_rank_caches()
+        assert all(r == runs[0] for r in runs)
+        assert len(runs[0]) == 20
 
 
 class TestRobotsPolitenessJoins:

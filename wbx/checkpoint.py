@@ -361,9 +361,17 @@ def crawl_report(spark: SparkSession, store: "CheckpointStore") -> DataFrame:
     # its urls_scheduled metric has no per-partition rows — is exactly the
     # pathological round an operator needs to see; inner joins (or rooting
     # on the metrics rollup) would silently drop it from the health report.
-    # The round list is a driver-side manifest read, O(#rounds) ≪ O(data).
+    # The round list is the published round directories up to the manifest
+    # round — a driver-side listing, O(#rounds) ≪ O(data). A store may have
+    # gaps (rounds 1 and 3 committed), and a directory past the manifest
+    # round is a writer that died before the manifest swap: not yet visible.
+    latest = store.latest_round()
     committed = spark.createDataFrame(
-        [(r,) for r in range(1, store.latest_round() + 1)], "round int"
+        sorted(
+            (int(d[1:]),) for d in os.listdir(base)
+            if d.startswith("r") and d[1:].isdigit() and int(d[1:]) <= latest
+        ),
+        "round int",
     )
     return (
         committed.join(per, "round", "left")

@@ -1265,7 +1265,8 @@ def salted_partition_key(host: Column, salt_buckets: int = 16) -> Column:
 
 
 # DataFrames persisted by global_rank, released by release_rank_caches().
-# One entry per rank call; run_crawl releases per round, bench per query.
+# One entry per distinct cached plan; run_crawl releases per round, bench
+# per query.
 _RANK_CACHES: list[DataFrame] = []
 # leak backstop for callers that never release (notebooks, direct
 # crawl_round users): beyond this many live caches the oldest pair is
@@ -1285,6 +1286,17 @@ def release_rank_caches() -> None:
 
 
 def _register_rank_cache(df: DataFrame) -> None:
+    """Track a persisted DataFrame for release. Spark's CacheManager keeps
+    ONE entry for semantically equal plans (persisting a repeat of a cached
+    plan is a no-op and reads the first one's entry), so a repeat refreshes
+    the existing registration instead of adding a second: a FIFO eviction
+    of the older twin would otherwise unpersist the entry the live round
+    is reading, and every later repeat would recompute its whole upstream
+    (canonicalize, anti-join, robots, politeness) once per consumer."""
+    for i, cached in enumerate(_RANK_CACHES):
+        if cached.sameSemantics(df):
+            _RANK_CACHES.append(_RANK_CACHES.pop(i))
+            return
     _RANK_CACHES.append(df)
     while len(_RANK_CACHES) > _RANK_CACHE_CAP:
         _RANK_CACHES.pop(0).unpersist()

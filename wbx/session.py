@@ -5,6 +5,8 @@ AQE on (runtime join re-planning + skew-join splitting for hot domains),
 Arrow transfer on (every byte-level kernel is a pandas UDF), shuffle
 partitions sized to cores rather than the 200 default, UTC session TZ so
 results compare bit-for-bit against the DuckDB oracle.
+Generated-code cache sized to 1000 classes (Spark's 100 is below one
+archive-query pass), so a warm session reuses its compiled plans.
 """
 
 from __future__ import annotations
@@ -54,6 +56,16 @@ def get_spark(
         # NULL iff url is NULL). Off fleet-wide; guarded by
         # tests/test_plans.py::TestFrontierCodegen.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # Static conf: must be set before the JVM's first session. Spark's
+        # default of 100 generated classes is a Guava cache of 4 LRU
+        # segments of 25, below wbx's per-op working sets (measured on
+        # 4.1.2: 90 classes per archive-query pass — scan, summarize,
+        # match_pairs, compare_headers, cdx_index — 72 per crawl_round,
+        # >=85 per run_crawl round), so every warm repeat evicted and
+        # Janino-recompiled 23-85 byte-identical classes and re-JITted
+        # them. 1000 leaves headroom for the uneven segment split; guarded
+        # by tests/test_plans.py::TestCodegenCacheReuse.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():
