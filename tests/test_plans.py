@@ -274,6 +274,18 @@ class TestFrontierCodegen:
         # classes and a run_crawl round 40-85
         assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
 
+    def test_driver_jvm_runs_raised_c2_thresholds(self, spark):
+        # JVM option set by the session factory (see wbx/session.py): at
+        # HotSpot's default thresholds a repeated crawl_round kept paying
+        # 0.5-2.5 s of C2 compile CPU per op for 10+ warm repeats
+        mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        args = set(mx.getInputArguments())
+        assert {
+            "-XX:Tier4InvocationThreshold=50000",
+            "-XX:Tier4MinInvocationThreshold=6000",
+            "-XX:Tier4CompileThreshold=150000",
+        } <= args
+
 
 class TestCodegenCacheReuse:
     """A warm repeat of a query must reuse Spark's generated classes: each

@@ -7,6 +7,8 @@ partitions sized to cores rather than the 200 default, UTC session TZ so
 results compare bit-for-bit against the DuckDB oracle.
 Generated-code cache sized to 1000 classes (Spark's 100 is below one
 archive-query pass), so a warm session reuses its compiled plans.
+Driver JVM C2 thresholds raised tenfold, so lukewarm planner code is not
+recompiled by C2 for many ops into a session.
 """
 
 from __future__ import annotations
@@ -14,6 +16,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# HotSpot tier-4 (C2) thresholds at ten times their defaults (5000 / 600 /
+# 15000); see get_spark
+_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000"
+)
 
 
 def get_spark(
@@ -66,6 +76,16 @@ def get_spark(
         # them. 1000 leaves headroom for the uneven segment split; guarded
         # by tests/test_plans.py::TestCodegenCacheReuse.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # JVM option, read when the driver JVM launches. Every wbx query
+        # re-plans a large Catalyst tree through py4j, and at HotSpot's
+        # default tier-4 thresholds the C2 compiles of that lukewarm
+        # planner code went on for 10+ warm repeats: 0.5-2.5 s of compile
+        # CPU per repeated crawl_round (JDK 17, 4 vCPU), so per-op cost
+        # depended on how many ops the session had run. Ten times the
+        # invocation thresholds leaves that code in C1; loops still reach
+        # C2 through the unchanged back-edge threshold. A caller's own
+        # spark.driver.defaultJavaOptions replaces this value.
+        .config("spark.driver.defaultJavaOptions", _JIT_OPTIONS)
     )
     if extra_conf:
         for k, v in extra_conf.items():
