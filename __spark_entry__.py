@@ -30,11 +30,12 @@ from pyspark.sql import functions as F
 from wbx import analytics, filters, sampling, simsearch, textops
 from wbx.extract import extract_text_udf
 from wbx.frontier import (
+    SeenSet,
     build_seen_bloom,
     canonicalize_url,
     crawl_round,
     dedup_url_latest,
-    filter_unseen_with_bloom,
+    filter_unseen,
     url_host,
     with_canonical,
 )
@@ -844,7 +845,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "url_hash", "canon_url"
         )
         bloom = build_seen_bloom(seen, partitions=16)
-        return filter_unseen_with_bloom(cand, seen, bloom, partitions=16).select(
+        return filter_unseen(cand, SeenSet(seen, sketch=bloom, partitions=16)).select(
             "doc_id", "canon_url"
         )
 
@@ -853,7 +854,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def unseen_split(spark, sf):
         """Compacted-store membership path (wbx/frontier.py
         filter_unseen_split): the seen set arrives SPLIT as a compacted
-        base + recent deltas — the shape CheckpointStore.load_seen_split
+        base + recent deltas — the shape CheckpointStore.load_seen_set
         yields after compact_seen(bucketed=True) — and the anti-join
         chains base-then-recent without ever unioning the cumulative set.
         Bit-identical to filter_unseen on the union (the anti-join
@@ -884,11 +885,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cannot do), then run the cuckoo-prefiltered exact anti-join.
         Result is exact by construction (the sketch only admits candidates
         to the exact check), so the oracle is closed-form."""
-        from wbx.cuckoo import (
-            build_seen_cuckoo,
-            filter_unseen_with_cuckoo,
-            remove_seen_cuckoo,
-        )
+        from wbx.cuckoo import build_seen_cuckoo, remove_seen_cuckoo
 
         docs = _t(spark, sf, "documents").select("doc_id")
         url = F.concat(
@@ -907,7 +904,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ck = remove_seen_cuckoo(
             build_seen_cuckoo(seen0, partitions=16), dels, partitions=16
         )
-        return filter_unseen_with_cuckoo(cand, seen, ck, partitions=16).select(
+        return filter_unseen(cand, SeenSet(seen, sketch=ck, partitions=16)).select(
             "doc_id", "canon_url"
         )
 
@@ -923,15 +920,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             schema="host string, rule_type string, path_prefix string",
         )
         seen = _frontier_seen(spark, sf)
-        # exercise the flagship path: co-partitioned Bloom prefilter + exact
-        # confirm — bit-identical to the plain anti-join, pinned by the oracle
+        # exercise the flagship path: Bloom prefilter + exact confirm —
+        # bit-identical to the plain anti-join, pinned by the oracle
         return crawl_round(
             _frontier_candidates(spark, sf),
-            seen,
+            SeenSet(seen, sketch=build_seen_bloom(seen, partitions=16), partitions=16),
             hosts,
             robots,
-            bloom=build_seen_bloom(seen, partitions=16),
-            bloom_partitions=16,
         ).select("canon_url", "host", "priority", "fetch_order")
 
     q["frontier_crawl_round"] = round_q

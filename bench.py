@@ -32,14 +32,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 os.environ.setdefault("WBX_INPUT_PARTITIONS", str(2 * CPUS))
 
 
-def _half_ram() -> str:
-    """Half of MemTotal, in MiB, as a JVM size: the default driver heap
-    must fit the host and leave room for the Python workers."""
-    with open("/proc/meminfo") as f:
-        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-    return f"{kib // 2048}m"
-
-
 def get_session():
     from wbx.session import get_spark
 
@@ -53,7 +45,6 @@ def get_session():
             # untimed-unrealistic) repartition shuffle of the payload bytes
             "spark.sql.files.maxPartitionBytes": "8m",
             "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_ram()),
         },
     )
 
@@ -174,7 +165,7 @@ def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[fl
     """One timed crawl round — exactly the engine's work: canonicalize →
     dedup → seen anti-join → robots → politeness → deterministic global
     rank."""
-    from wbx.frontier import build_seen_bloom, crawl_round, release_rank_caches
+    from wbx.frontier import SeenSet, build_seen_bloom, crawl_round, release_rank_caches
 
     cand = spark.read.parquet(os.path.join(base, "candidates"))
     seen = spark.read.parquet(os.path.join(base, "seen"))
@@ -211,9 +202,8 @@ def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[fl
         bloom.count()
     t0 = time.time()
     out = crawl_round(
-        cand, seen, hosts, robots, default_budget=500, bloom=bloom,
-        bloom_partitions=64, rank_boundary_cache=rank_cache,
-        seen_base=seen_base,
+        cand, SeenSet(seen, seen_base, bloom), hosts, robots, default_budget=500,
+        rank_boundary_cache=rank_cache,
     )
     n_sched = out.count()
     dt = time.time() - t0

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -200,7 +201,7 @@ class TestCompaction:
 
 
 class TestBucketedSeenBase:
-    """compact_seen(bucketed=True) + load_seen_split: the shuffle-free
+    """compact_seen(bucketed=True) + load_seen_set: the shuffle-free
     membership path for the 10^10-URL seen set (frontier.filter_unseen_split).
     Correctness here; the no-exchange plan shape is pinned in test_plans.py."""
 
@@ -210,9 +211,9 @@ class TestBucketedSeenBase:
         before = sorted(map(tuple, store.load_seen(spark).collect()))
         marker = store.compact_seen(spark, buckets=8, bucketed=True)
         assert marker["compacted_through"] == 3 and marker["buckets"] == 8
-        base, recent, nb = store.load_seen_split(spark)
-        assert nb == 8 and recent.count() == 0
-        assert sorted(map(tuple, base.collect())) == before
+        seen_set = store.load_seen_set(spark)
+        assert seen_set.base is not None and seen_set.recent.count() == 0
+        assert sorted(map(tuple, seen_set.base.collect())) == before
         # load_seen (the union reader) sees the same set through the base
         assert sorted(map(tuple, store.load_seen(spark).collect())) == before
 
@@ -221,24 +222,24 @@ class TestBucketedSeenBase:
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=2)
         store.compact_seen(spark, buckets=8, bucketed=True)
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=4)
-        base, recent, nb = store.load_seen_split(spark)
-        got = sorted(map(tuple, base.unionByName(recent).collect()))
+        seen_set = store.load_seen_set(spark)
+        got = sorted(map(tuple, seen_set.base.unionByName(seen_set.recent).collect()))
         assert got == sorted(map(tuple, store.load_seen(spark).collect()))
-        assert recent.count() > 0  # rounds 3-4 deltas ride the recent side
+        # rounds 3-4 deltas ride the recent side
+        assert seen_set.recent.count() > 0
 
     def test_split_load_falls_back_without_bucketed_compaction(self, spark, tmp_path):
         store = CheckpointStore(str(tmp_path / "b3"))
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=2)
-        base, recent, nb = store.load_seen_split(spark)
-        assert base is None and nb == 0
-        assert sorted(map(tuple, recent.collect())) == sorted(
+        seen_set = store.load_seen_set(spark)
+        assert seen_set.base is None
+        assert sorted(map(tuple, seen_set.recent.collect())) == sorted(
             map(tuple, store.load_seen(spark).collect())
         )
         # plain (non-bucketed) compaction must also use the fallback: its
         # files carry no bucket metadata
         store.compact_seen(spark, buckets=8)
-        base, recent, nb = store.load_seen_split(spark)
-        assert base is None and nb == 0
+        assert store.load_seen_set(spark).base is None
 
     def test_split_load_history_read_predating_compaction(self, spark, tmp_path):
         store = CheckpointStore(str(tmp_path / "b4"))
@@ -246,9 +247,9 @@ class TestBucketedSeenBase:
         want_r2 = sorted(map(tuple, store.load_seen(spark, 2).collect()))
         store.compact_seen(spark, buckets=8, bucketed=True)
         # the round-2 view must NOT see the round-3 base (it holds future keys)
-        base, recent, nb = store.load_seen_split(spark, 2)
-        assert base is None and nb == 0
-        assert sorted(map(tuple, recent.collect())) == want_r2
+        seen_set = store.load_seen_set(spark, 2)
+        assert seen_set.base is None
+        assert sorted(map(tuple, seen_set.recent.collect())) == want_r2
 
     def test_run_crawl_with_compact_every_is_bit_identical(self, spark, tmp_path):
         ref = CheckpointStore(str(tmp_path / "ref"))
@@ -284,21 +285,99 @@ class TestBucketedSeenBase:
         fa = sorted(map(tuple, ref.load(spark, "fetch_log", 5).collect()))
         fb = sorted(map(tuple, st.load(spark, "fetch_log", 5).collect()))
         assert fa == fb
+        # compaction rounds are keyed on the round id, not on where the
+        # resumed run started: like an uninterrupted compact_every=2 crawl
+        # it compacts at round 4, not 5
+        assert st._compaction()["compacted_through"] == 4
 
-    def test_run_crawl_compact_every_cuckoo_kind_identical(self, spark, tmp_path):
-        ref = CheckpointStore(str(tmp_path / "ref3"))
-        run_crawl(spark, ref, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=4)
-        st = CheckpointStore(str(tmp_path / "cmp3"))
+
+def crawl_state(spark, store, rounds):
+    """Every round's fetch_log, the seen set and the seen_bloom as of
+    round ``rounds``."""
+    logs = [
+        sorted(map(tuple, store.load(spark, "fetch_log", rid).collect()))
+        for rid in range(1, rounds + 1)
+    ]
+    seen = sorted(map(tuple, store.load_seen(spark, rounds).collect()))
+    bloom = sorted(
+        (r["bloom_part"], r["m"], tuple(r["words"]))
+        for r in store.load(spark, "seen_bloom", rounds).collect()
+    )
+    return logs, seen, bloom
+
+
+@pytest.fixture(scope="module")
+def ref_store(spark, tmp_path_factory):
+    """An uninterrupted 3-round crawl compacting every 2 rounds."""
+    store = CheckpointStore(str(tmp_path_factory.mktemp("ref") / "cp"))
+    run_crawl(
+        spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark),
+        rounds=3, compact_every=2,
+    )
+    return store
+
+
+class TestResumeFaults:
+    """Whatever step a run was killed at, resuming it lands on the
+    uninterrupted crawl's fetch logs, seen set and seen_bloom."""
+
+    def crawl(self, spark, store, rounds, **kw):
         run_crawl(
-            spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark),
-            rounds=4, compact_every=1, sketch_kind="cuckoo",
+            spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark),
+            rounds=rounds, **kw,
         )
-        assert sorted(map(tuple, ref.load_seen(spark).collect())) == sorted(
-            map(tuple, st.load_seen(spark).collect())
-        )
-        fa = sorted(map(tuple, ref.load(spark, "fetch_log", 4).collect()))
-        fb = sorted(map(tuple, st.load(spark, "fetch_log", 4).collect()))
-        assert fa == fb
+
+    def test_resume_rebuilds_missing_seen_bloom(self, spark, tmp_path, ref_store):
+        st = CheckpointStore(str(tmp_path / "cp"))
+        self.crawl(spark, st, 2)
+        for rid in (1, 2):
+            shutil.rmtree(os.path.join(st.base, "rounds", f"r{rid:06d}", "seen_bloom"))
+        self.crawl(spark, st, 3)
+        assert crawl_state(spark, st, 3) == crawl_state(spark, ref_store, 3)
+
+    def test_crash_before_manifest_swap(self, spark, tmp_path, monkeypatch, ref_store):
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if dst.endswith("MANIFEST.json"):
+                with open(src) as f:
+                    if json.load(f)["round"] == 2:
+                        raise RuntimeError("killed before the manifest swap")
+            real_replace(src, dst)
+
+        st = CheckpointStore(str(tmp_path / "cp"))
+        monkeypatch.setattr(os, "replace", replace)
+        with pytest.raises(RuntimeError, match="killed"):
+            self.crawl(spark, st, 3, compact_every=2)
+        monkeypatch.undo()
+        # round 2 is on disk but not visible
+        assert st.latest_round() == 1
+        assert os.path.isdir(os.path.join(st.base, "rounds", "r000002"))
+        self.crawl(spark, st, 3, compact_every=2)
+        assert crawl_state(spark, st, 3) == crawl_state(spark, ref_store, 3)
+        assert st._compaction()["compacted_through"] == 2
+
+    def test_crash_inside_compaction(self, spark, tmp_path, monkeypatch, ref_store):
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if dst.endswith("COMPACTION.json"):
+                raise RuntimeError("killed inside compaction")
+            real_replace(src, dst)
+
+        st = CheckpointStore(str(tmp_path / "cp"))
+        monkeypatch.setattr(os, "replace", replace)
+        with pytest.raises(RuntimeError, match="killed"):
+            self.crawl(spark, st, 3, compact_every=2)
+        monkeypatch.undo()
+        # round 2 committed, its compaction (base files written) unpublished
+        assert st.latest_round() == 2 and st._compaction() is None
+        assert os.path.isdir(os.path.join(st.base, "rounds", "r000002", "seen_base"))
+        # round 3 confirms membership against the deltas; the next
+        # compaction is due at round 4
+        self.crawl(spark, st, 3, compact_every=2)
+        assert crawl_state(spark, st, 3) == crawl_state(spark, ref_store, 3)
+        assert st._compaction() is None
 
 
 class TestCrawlReport:

@@ -49,7 +49,9 @@ class TestCuckooMembership:
         ck = cuckoo.build_seen_cuckoo(seen, partitions=8)
         via = sorted(
             r["canon_url"]
-            for r in cuckoo.filter_unseen_with_cuckoo(cand, seen, ck, 8).collect()
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(seen, sketch=ck, partitions=8)
+            ).collect()
         )
         exact = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
@@ -159,7 +161,9 @@ class TestCuckooSaturation:
         assert tagged.filter(~F.col("_maybe_seen")).count() == 0
         via = sorted(
             r["canon_url"]
-            for r in cuckoo.filter_unseen_with_cuckoo(cand, seen, ck, 1).collect()
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(seen, sketch=ck, partitions=1)
+            ).collect()
         )
         exact = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
@@ -225,8 +229,8 @@ class TestCuckooPlan:
 
 
 class TestCuckooCrawlLoop:
-    """crawl_round / run_crawl integration: the cuckoo is a drop-in
-    alternative seen-sketch with bit-identical scheduling."""
+    """crawl_round integration: the cuckoo is a drop-in alternative
+    seen-sketch with bit-identical scheduling."""
 
     def fixture_urls(self):
         return [
@@ -247,62 +251,9 @@ class TestCuckooCrawlLoop:
         frontier.release_rank_caches()
         ck = cuckoo.build_seen_cuckoo(seen, partitions=8)
         cucked = frontier.crawl_round(
-            cand, seen, hosts, batch_size=50, cuckoo=ck, bloom_partitions=8
+            cand, frontier.SeenSet(seen, sketch=ck, partitions=8), hosts,
+            batch_size=50,
         )
         rows_ck = [tuple(r) for r in cucked.orderBy("fetch_order").collect()]
         frontier.release_rank_caches()
         assert rows_plain == rows_ck
-
-    def test_both_sketches_rejected(self, spark):
-        cand, seen = make_sets(spark, n=20)
-        hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
-        ck = cuckoo.build_seen_cuckoo(seen, partitions=2)
-        bl = frontier.build_seen_bloom(seen, partitions=2)
-        with pytest.raises(ValueError, match="at most one"):
-            frontier.crawl_round(
-                cand.select(F.col("canon_url").alias("url"), F.lit(1.0).alias("priority")),
-                seen,
-                hosts,
-                bloom=bl,
-                cuckoo=ck,
-            )
-
-    def test_run_crawl_cuckoo_matches_bloom_and_resumes(self, spark, tmp_path):
-        from tests.test_checkpoint import hosts_df, make_expand, seeds_df
-        from wbx.checkpoint import CheckpointStore, run_crawl
-
-        expand = make_expand(spark)
-        hosts = hosts_df(spark)
-
-        def state(store, rounds):
-            logs = []
-            for rid in range(1, rounds + 1):
-                rows = store.load(spark, "fetch_log", rid).collect()
-                logs.extend(
-                    sorted((r["round"], r["fetch_order"], r["canon_url"]) for r in rows)
-                )
-            seen = sorted(r["canon_url"] for r in store.load_seen(spark).collect())
-            return logs, seen
-
-        bl = CheckpointStore(str(tmp_path / "bloom"))
-        run_crawl(spark, bl, seeds_df(spark), expand, hosts, rounds=3)
-        ckf = CheckpointStore(str(tmp_path / "cuckoo_full"))
-        run_crawl(
-            spark, ckf, seeds_df(spark), expand, hosts, rounds=3,
-            sketch_kind="cuckoo",
-        )
-        assert state(bl, 3) == state(ckf, 3)
-        assert ckf.has_table("seen_cuckoo") and not ckf.has_table("seen_bloom")
-
-        # killed after round 2, resumed — lands on the identical state
-        part = CheckpointStore(str(tmp_path / "cuckoo_part"))
-        run_crawl(
-            spark, part, seeds_df(spark), expand, hosts, rounds=2,
-            sketch_kind="cuckoo",
-        )
-        part2 = CheckpointStore(str(tmp_path / "cuckoo_part"))
-        run_crawl(
-            spark, part2, seeds_df(spark), expand, hosts, rounds=3,
-            sketch_kind="cuckoo",
-        )
-        assert state(ckf, 3) == state(part2, 3)

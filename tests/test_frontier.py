@@ -121,26 +121,19 @@ class TestSeenSet:
         bloom = frontier.build_seen_bloom(seen, partitions=8)
         via_bloom = sorted(
             r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(cand, seen, bloom, 8).collect()
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(seen, sketch=bloom, partitions=8)
+            ).collect()
         )
         exact = sorted(r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect())
         assert via_bloom == exact
 
     def test_copartitioned_mode_bit_identical(self, spark):
         """The scale-path filter distribution (cogrouped per hash range,
-        no driver collect) must tag exactly like the broadcast mode and
-        keep the exact-result contract."""
+        no driver collect) must tag exactly like the broadcast mode (the
+        exact-result contract of both legs is pinned by the auto-mode test)."""
         cand, seen = self.make_sets(spark)
         bloom = frontier.build_seen_bloom(seen, partitions=8)
-        via_co = sorted(
-            r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(
-                cand, seen, bloom, 8, mode="copartition"
-            ).collect()
-        )
-        exact = sorted(r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect())
-        assert via_co == exact
-        # tag-level identity too
         t_b = frontier.bloom_might_contain(cand, bloom, 8, mode="broadcast")
         t_c = frontier.bloom_might_contain(cand, bloom, 8, mode="copartition")
         b = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_b.collect())
@@ -165,7 +158,9 @@ class TestSeenSet:
             [], "url_hash long, canon_url string, fetched_round int"
         )
         bloom = frontier.build_seen_bloom(empty, partitions=4)
-        got = frontier.filter_unseen_with_bloom(cand, empty, bloom, 4)
+        got = frontier.filter_unseen(
+            cand, frontier.SeenSet(empty, sketch=bloom, partitions=4)
+        )
         assert got.count() == 50
 
     def test_auto_mode_bit_identical_both_sides_of_threshold(self, spark):
@@ -176,11 +171,9 @@ class TestSeenSet:
         exact = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
         )
+        sketched = frontier.SeenSet(seen, sketch=bloom, partitions=8)
         via_auto = sorted(
-            r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(
-                cand, seen, bloom, 8, mode="auto"
-            ).collect()
+            r["canon_url"] for r in frontier.filter_unseen(cand, sketched).collect()
         )
         assert via_auto == exact
         import wbx.frontier as fr
@@ -190,9 +183,7 @@ class TestSeenSet:
         try:
             via_co = sorted(
                 r["canon_url"]
-                for r in frontier.filter_unseen_with_bloom(
-                    cand, seen, bloom, 8, mode="auto"
-                ).collect()
+                for r in frontier.filter_unseen(cand, sketched).collect()
             )
         finally:
             fr._BLOOM_BROADCAST_MAX_BYTES = saved
@@ -209,8 +200,8 @@ class TestSeenSet:
             bloom = frontier.update_seen_bloom(bloom, delta, partitions=8, m=1 << 12)
         via = sorted(
             r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(
-                cand, seen, bloom, 8, mode="copartition"
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(seen, sketch=bloom, partitions=8)
             ).collect()
         )
         exact = sorted(
@@ -410,8 +401,8 @@ class TestCrawlRound:
         assert runs[0] == runs[1]
 
     def test_bloom_backed_round_bit_identical(self, spark):
-        # the flagship path (copartitioned Bloom prefilter) must schedule
-        # exactly the same batch as the plain anti-join round
+        # the flagship path (Bloom prefilter) must schedule exactly the
+        # same batch as the plain anti-join round
         urls = self.fixture_urls()
         seen_urls = [u for u, _ in urls[:40]]
         cand = spark.createDataFrame(urls, "url string, priority double")
@@ -424,7 +415,8 @@ class TestCrawlRound:
         frontier.release_rank_caches()
         bloom = frontier.build_seen_bloom(seen, partitions=8)
         boomed = frontier.crawl_round(
-            cand, seen, hosts, batch_size=50, bloom=bloom, bloom_partitions=8
+            cand, frontier.SeenSet(seen, sketch=bloom, partitions=8), hosts,
+            batch_size=50,
         )
         rows_bloom = [tuple(r) for r in boomed.orderBy("fetch_order").collect()]
         frontier.release_rank_caches()
@@ -1135,7 +1127,7 @@ class TestFilterUnseenSplit:
         want = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
         )
-        for kwargs in ({}, {"base_buckets": 4}, {"broadcast_recent": True}):
+        for kwargs in ({}, {"broadcast_recent": True}):
             got = sorted(
                 r["canon_url"]
                 for r in frontier.filter_unseen_split(
@@ -1178,8 +1170,8 @@ class TestFilterUnseenSplit:
         bloom = frontier.build_seen_bloom(seen, partitions=8)
         got = sorted(
             r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(
-                cand, recent, bloom, 8, seen_base=base
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(recent, base, bloom, 8)
             ).collect()
         )
         want = sorted(
@@ -1194,8 +1186,8 @@ class TestFilterUnseenSplit:
         sk = ck.build_seen_cuckoo(seen, partitions=8, nbuckets=1 << 12)
         got = sorted(
             r["canon_url"]
-            for r in ck.filter_unseen_with_cuckoo(
-                cand, recent, sk, 8, seen_base=base
+            for r in frontier.filter_unseen(
+                cand, frontier.SeenSet(recent, base, sk, 8)
             ).collect()
         )
         want = sorted(

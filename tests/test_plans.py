@@ -286,6 +286,16 @@ class TestFrontierCodegen:
             "-XX:Tier4CompileThreshold=150000",
         } <= args
 
+    def test_driver_heap_defaults_to_half_of_host_memory(self, monkeypatch):
+        from wbx.session import driver_memory
+
+        monkeypatch.delenv("WBX_DRIVER_MEMORY", raising=False)
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        assert driver_memory() == f"{kib // 2048}m"
+        monkeypatch.setenv("WBX_DRIVER_MEMORY", "3g")
+        assert driver_memory() == "3g"
+
 
 class TestCodegenCacheReuse:
     """A warm repeat of a query must reuse Spark's generated classes: each
@@ -478,7 +488,7 @@ class TestBucketedSeenBaseNoExchange:
         buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         marker = store.compact_seen(spark, buckets=buckets, bucketed=True)
         assert marker["buckets"] == buckets
-        base, recent, nb = store.load_seen_split(spark)
+        seen_set = store.load_seen_set(spark)
 
         cand = (
             spark.range(0, 9000, 2)
@@ -498,7 +508,7 @@ class TestBucketedSeenBaseNoExchange:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             out = frontier.filter_unseen_split(
-                deduped, base, recent, broadcast_recent=True
+                deduped, seen_set.base, seen_set.recent, broadcast_recent=True
             )
             out.count()
             plan = out._jdf.queryExecution().executedPlan().toString()

@@ -368,38 +368,6 @@ class TestStreamCrawl:
         assert store.has_table("stream_marker", 1)
         assert not store.has_table("no_such_table", 1)
 
-    def test_cuckoo_sketch_kind_matches_bloom(self, spark, tmp_path):
-        """The streaming round with sketch_kind='cuckoo' schedules the
-        identical batches and maintains seen_cuckoo incrementally."""
-        from wbx.checkpoint import CheckpointStore
-        from wbx.streaming import crawl_batch_processor
-
-        batches = [
-            spark.createDataFrame(
-                [
-                    (f"http://h{i % 5}.com/p/{i}", float(i % 3))
-                    for i in range(lo, lo + 10)
-                ],
-                self.CAND_SCHEMA,
-            )
-            for lo in (0, 5)  # second batch overlaps the first by 5 urls
-        ]
-        logs = {}
-        for kind in ("bloom", "cuckoo"):
-            store = CheckpointStore(str(tmp_path / f"store_{kind}"))
-            proc = crawl_batch_processor(store, self._hosts(spark), sketch_kind=kind)
-            for bid, b in enumerate(batches):
-                proc(b, bid)
-            assert store.latest_round() == 2
-            logs[kind] = sorted(
-                (r["round"], r["fetch_order"], r["canon_url"])
-                for rid in (1, 2)
-                for r in store.load(spark, "fetch_log", rid).collect()
-            )
-            expected = "seen_cuckoo" if kind == "cuckoo" else "seen_bloom"
-            assert store.has_table(expected, 2)
-        assert logs["bloom"] == logs["cuckoo"]
-
 
 class TestStreamCrawlCompaction:
     """compact_every in the streaming scheduler: rounds after a bucketed

@@ -31,7 +31,21 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wbx.frontier import (
+    SeenSet,
+    build_seen_bloom,
+    crawl_round,
+    empty_seen_bloom,
+    release_rank_caches,
+    update_seen_bloom,
+)
+
 MANIFEST = "MANIFEST.json"
+# the crawl loops' seen_bloom geometry: hash partitions and bits per
+# partition filter (2^20 suits tests; size m for the expected keys per
+# partition at scale, see update_seen_bloom)
+_SKETCH_PARTITIONS = 64
+_BLOOM_BITS = 1 << 20
 
 
 class CheckpointStore:
@@ -212,37 +226,44 @@ class CheckpointStore:
         os.replace(tmp, os.path.join(self.base, "COMPACTION.json"))
         return marker
 
-    def load_seen_split(
+    def load_seen_set(
         self, spark: SparkSession, round_id: int | None = None
-    ) -> tuple[DataFrame | None, DataFrame, int]:
-        """(bucketed base | None, recent deltas, bucket count) as of
-        ``round_id`` — the input shape of frontier.filter_unseen_split.
-        Falls back to (None, full seen scan, 0) when no bucketed compaction
-        covers the requested round (including history reads at a round
-        BEFORE the compaction point, where the base would contain keys from
-        the future)."""
+    ) -> SeenSet:
+        """The seen set as of ``round_id`` in the shape the crawl loops
+        schedule against, with the loops' Bloom sketch.
+
+        Membership: the bucketed base + the deltas committed after it when
+        a bucketed compaction covers the round, else the full set as
+        ``recent`` (including history reads at a round BEFORE the
+        compaction point, where the base would contain keys from the
+        future). Sketch: the round's ``seen_bloom`` table; empty before
+        round 1; rebuilt from the full set for a store that lacks the table
+        (one crawled before the loops kept it), at the loops' capacity so
+        the next round's incremental update matches it."""
         rid = round_id if round_id is not None else self.latest_round()
         comp = self._compaction()
+        base = None
         if (
-            not comp
-            or not comp.get("buckets")
-            or comp["compacted_through"] > rid
-            or not os.path.isdir(comp["path"])
+            comp
+            and comp.get("buckets")
+            and comp["compacted_through"] <= rid
+            and os.path.isdir(comp["path"])
         ):
-            return None, self.load_seen(spark, rid), 0
-        base = self.attach_seen_base(spark)
-        paths = [
-            p
-            for r in range(comp["compacted_through"] + 1, rid + 1)
-            if os.path.isdir(
-                p := os.path.join(self.base, "rounds", f"r{r:06d}", "seen_delta")
+            base = self.attach_seen_base(spark)
+            recent = self._read_keys(
+                spark, self._delta_paths(comp["compacted_through"] + 1, rid)
             )
-        ]
-        if paths:
-            recent = spark.read.parquet(*paths).select("url_hash", "canon_url")
         else:
-            recent = spark.createDataFrame([], "url_hash long, canon_url string")
-        return base, recent, int(comp["buckets"])
+            recent = self.load_seen(spark, rid)
+        if self.has_table("seen_bloom", rid):
+            sketch = self.load(spark, "seen_bloom", rid)
+        elif rid == 0:
+            sketch = empty_seen_bloom(spark)
+        else:
+            sketch = build_seen_bloom(
+                self.load_seen(spark, rid), _SKETCH_PARTITIONS, m=_BLOOM_BITS
+            )
+        return SeenSet(recent, base, sketch, _SKETCH_PARTITIONS)
 
     def _compaction(self) -> dict | None:
         try:
@@ -250,6 +271,21 @@ class CheckpointStore:
                 return json.load(f)
         except FileNotFoundError:
             return None
+
+    def _delta_paths(self, first: int, last: int) -> list[str]:
+        return [
+            p
+            for r in range(first, last + 1)
+            if os.path.isdir(
+                p := os.path.join(self.base, "rounds", f"r{r:06d}", "seen_delta")
+            )
+        ]
+
+    @staticmethod
+    def _read_keys(spark: SparkSession, paths: list[str]) -> DataFrame:
+        if not paths:
+            return spark.createDataFrame([], "url_hash long, canon_url string")
+        return spark.read.parquet(*paths).select("url_hash", "canon_url")
 
     def load_seen(self, spark: SparkSession, round_id: int | None = None) -> DataFrame:
         """The full seen-set as of `round_id`: the union of every round's
@@ -269,16 +305,7 @@ class CheckpointStore:
         if comp and comp["compacted_through"] <= rid and os.path.isdir(comp["path"]):
             paths.append(comp["path"])
             start = comp["compacted_through"] + 1
-        paths += [
-            p
-            for r in range(start, rid + 1)
-            if os.path.isdir(
-                p := os.path.join(self.base, "rounds", f"r{r:06d}", "seen_delta")
-            )
-        ]
-        if not paths:
-            return spark.createDataFrame([], "url_hash long, canon_url string")
-        return spark.read.parquet(*paths).select("url_hash", "canon_url")
+        return self._read_keys(spark, paths + self._delta_paths(start, rid))
 
 
 # ---------------------------------------------------------------------------
@@ -401,6 +428,71 @@ def crawl_report(spark: SparkSession, store: "CheckpointStore") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def crawl_step(
+    store: CheckpointStore,
+    round_id: int,
+    candidates: DataFrame,
+    hosts: DataFrame,
+    compact_every: int | None = None,
+    extra_tables=None,
+    **round_opts,
+) -> None:
+    """One committed crawl round, shared by :func:`run_crawl` and
+    wbx.streaming.crawl_batch_processor.
+
+    Schedules ``candidates`` with crawl_round (``round_opts`` are its
+    keyword arguments) against the store's seen set as of the previous
+    round (load_seen_set), then commits {seen_delta, fetch_log, metrics,
+    seen_bloom} plus ``extra_tables(batch)`` as round ``round_id``. The
+    batch is already unseen (anti-joined) and unique per canon_url
+    (deduped), so it IS the round's exact seen-delta; the Bloom sketch ORs
+    in only that delta (update_seen_bloom, O(batch)).
+
+    ``compact_every``: after committing a round whose id is a multiple of
+    K, fold the seen deltas into ONE bucketed base table
+    (compact_seen(bucketed=True)); later rounds then confirm membership
+    against it without shuffling the cumulative set. Keyed on the round
+    id, so a resumed crawl compacts at the same rounds as an uninterrupted
+    one. A crash between the commit and the compaction leaves the round
+    committed and its deltas uncompacted until the next multiple of K;
+    membership results never depend on compaction."""
+    spark = candidates.sparkSession
+    seen = store.load_seen_set(spark, round_id - 1)
+    batch = crawl_round(candidates, seen, hosts, **round_opts).persist()
+    seen_delta = batch.select("url_hash", "canon_url")
+    fetch_log = batch.select(
+        F.lit(round_id).alias("round"),
+        "fetch_order",
+        "canon_url",
+        "url_hash",
+        "host",
+        "priority",
+    )
+    store.commit(
+        round_id,
+        {
+            "seen_delta": seen_delta,
+            "fetch_log": fetch_log,
+            "metrics": round_metrics(round_id, batch, seen_delta),
+            "seen_bloom": update_seen_bloom(
+                seen.sketch, seen_delta, seen.partitions, _BLOOM_BITS
+            ),
+            **(extra_tables(batch) if extra_tables else {}),
+        },
+    )
+    if compact_every and round_id % compact_every == 0:
+        # bucket count = shuffle partitions -> the next round's
+        # candidate-side exchange (dedup groupBy, same keys) is
+        # directly compatible with the base's bucketing
+        store.compact_seen(
+            spark,
+            buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
+            bucketed=True,
+        )
+    batch.unpersist()
+    release_rank_caches()
+
+
 def run_crawl(
     spark: SparkSession,
     store: CheckpointStore,
@@ -411,11 +503,6 @@ def run_crawl(
     rounds: int = 3,
     batch_size: int | None = None,
     default_budget: int = 10,
-    use_bloom: bool = True,
-    bloom_partitions: int = 64,
-    bloom_bits: int = 1 << 20,
-    sketch_kind: str = "bloom",
-    cuckoo_nbuckets: int = 1 << 16,
     rank_refresh_every: int = 8,
     compact_every: int | None = None,
     reprioritize=None,
@@ -423,7 +510,8 @@ def run_crawl(
 ) -> dict:
     """Batch-iterative crawl: each round schedules a fetch batch from the
     current frontier, marks it seen, expands it into next-round candidates,
-    and commits {frontier, seen, fetch_log, metrics} as one snapshot.
+    and commits {frontier, seen_delta, seen_bloom, fetch_log, metrics} as
+    one snapshot (see :func:`crawl_step`).
 
     Resume contract: if the store already holds N committed rounds, the
     loop continues at N+1 against the checkpointed state — a killed run
@@ -433,39 +521,28 @@ def run_crawl(
     ``expand(batch_df) -> DataFrame(url, priority)`` must be deterministic.
     seeds: (url, priority).
 
-    Seen-set growth contract (the 10^10-URL design point): a round writes
-    ONLY its delta — the keys it just scheduled — never a rewrite of the
-    cumulative set. crawl_round's anti-join guarantees the batch is disjoint
-    from every prior delta, so ``seen = union of deltas`` is exact with no
-    distinct/shuffle, and per-round commit cost is O(batch), constant in
-    crawl age (test_checkpoint pins this: round N's seen_delta row count
-    equals round N's fetch_log row count).
+    Seen set: each round schedules against CheckpointStore.load_seen_set —
+    a :class:`wbx.frontier.SeenSet` of the committed deltas (or a bucketed
+    base plus the deltas after it) and a per-partition Bloom sketch.
 
-    Seen-sketch contract (`use_bloom`, on by default): the loop maintains
-    per-partition Bloom filters over the seen keys ALONGSIDE the deltas —
-    each round ORs in only that round's delta (update_seen_bloom, O(batch))
-    and commits the filters as the ``seen_bloom`` table, then feeds them to
-    crawl_round's co-partitioned prefilter, so the definitely-unseen
-    majority of candidates never probes the cumulative seen table. Results
-    are bit-identical with the sketch on or off (false positives are
-    re-checked exactly; the sketch never drops a candidate). Resuming from
-    a checkpoint that predates the sketch rebuilds it once from the seen
-    set.
-
-    ``sketch_kind`` picks the sketch family: "bloom" (default — densest
-    bits/key) or "cuckoo" (wbx.cuckoo — pick it when the crawl also
-    retracts URLs between rounds; its table commits as ``seen_cuckoo`` and
-    is maintained with the same O(batch) incremental contract). Both are
-    admit-only, so the fetch batches are bit-identical across kinds.
-
-    ``compact_every``: every K committed rounds, fold the accumulated
-    seen deltas into ONE bucketed base table
-    (compact_seen(bucketed=True)) and switch the loop to the split
-    membership path (load_seen_split → frontier.filter_unseen_split):
-    the cumulative seen set then joins co-located off its bucketed scan —
-    no exchange, no sort, zero bytes of crawl history on the wire per
-    round — while only the ≤K recent deltas shuffle. This is the
-    10^10-URL operating mode; results are bit-identical with it off.
+    - Growth (the 10^10-URL design point): a round writes ONLY its delta —
+      the keys it just scheduled — never a rewrite of the cumulative set.
+      crawl_round's anti-join guarantees the batch is disjoint from every
+      prior delta, so ``seen = union of deltas`` is exact with no
+      distinct/shuffle, and per-round commit cost is O(batch), constant in
+      crawl age (test_checkpoint pins this: round N's seen_delta row count
+      equals round N's fetch_log row count).
+    - Sketch: each round ORs only its delta into the Bloom filters and
+      commits them as ``seen_bloom``; crawl_round's prefilter then lets the
+      definitely-unseen majority of candidates skip the cumulative seen
+      table. False positives are re-checked exactly, so the batches are
+      those of the plain anti-join. A store without ``seen_bloom`` has it
+      rebuilt once from the seen set on resume.
+    - ``compact_every``: every K-th round (by round id) folds the deltas
+      into a bucketed base, which then joins co-located off its bucketed
+      scan — no exchange, no sort, zero bytes of crawl history on the wire
+      per round — while only the recent deltas shuffle. This is the
+      10^10-URL operating mode; results are bit-identical with it off.
 
     ``reprioritize(frontier_df) -> DataFrame(url, priority)``: optional
     deterministic hook applied to each round's expanded frontier before it
@@ -476,42 +553,14 @@ def run_crawl(
     it changes crawl ORDER by design, so leave it unset when reproducing
     the reference's priority semantics.
     """
-    from wbx import cuckoo as _cuckoo
-    from wbx.frontier import (
-        build_seen_bloom,
-        crawl_round,
-        empty_seen_bloom,
-        release_rank_caches,
-        update_seen_bloom,
-    )
 
-    if sketch_kind not in ("bloom", "cuckoo"):
-        raise ValueError("sketch_kind must be bloom | cuckoo")
-    is_bloom = sketch_kind == "bloom"
-    table = "seen_bloom" if is_bloom else "seen_cuckoo"
+    def frontier_table(batch: DataFrame) -> dict:
+        frontier = expand(batch)
+        if reprioritize is not None:
+            frontier = reprioritize(frontier)
+        return {"frontier": frontier}
+
     start = store.latest_round()
-    if start == 0:
-        seen_base, nbuckets = None, 0
-        seen = spark.createDataFrame([], "url_hash long, canon_url string")
-        frontier = seeds
-        sketch = (
-            empty_seen_bloom(spark) if is_bloom else _cuckoo.empty_seen_cuckoo(spark)
-        )
-    else:
-        seen_base, seen, nbuckets = store.load_seen_split(spark)
-        frontier = store.load(spark, "frontier")
-        if store.has_table(table):
-            sketch = store.load(spark, table)
-        elif is_bloom:
-            # checkpoint predates the sketch — one rebuild (from the FULL
-            # seen set, not the split view), then incremental
-            sketch = build_seen_bloom(store.load_seen(spark), bloom_partitions)
-        else:
-            sketch = _cuckoo.build_seen_cuckoo(
-                store.load_seen(spark), bloom_partitions, nbuckets=cuckoo_nbuckets
-            )
-
-    last = None
     # rank-boundary reuse across rounds (see global_rank): boundaries only
     # steer partition balance, so a later round may rank against an earlier
     # round's sample; refreshed every `rank_refresh_every` rounds so the
@@ -520,66 +569,20 @@ def run_crawl(
     for rid in range(start + 1, rounds + 1):
         if rank_refresh_every and (rid - start - 1) % rank_refresh_every == 0:
             rank_cache.clear()
-        batch = crawl_round(
+        # each round reads the previous round's committed frontier, so its
+        # lineage is rooted in files, not an ever-deepening in-memory plan
+        frontier = seeds if rid == 1 else store.load(spark, "frontier", rid - 1)
+        crawl_step(
+            store,
+            rid,
             frontier,
-            seen,
             hosts,
-            robots,
-            batch_size,
-            default_budget,
-            bloom=sketch if (use_bloom and is_bloom) else None,
-            bloom_partitions=bloom_partitions,
-            cuckoo=sketch if (use_bloom and not is_bloom) else None,
+            compact_every,
+            frontier_table,
+            robots=robots,
+            batch_size=batch_size,
+            default_budget=default_budget,
             rank_boundary_cache=rank_cache,
             robots_style=robots_style,
-            # base_buckets stays None: the dedup/tagged side already
-            # arrives hash-partitioned on the join keys, so
-            # EnsureRequirements aligns it to the bucket count with at
-            # most one exchange — an explicit repartition here would add
-            # a second
-            seen_base=seen_base,
-        ).persist()
-        # the batch is already unseen (anti-joined) and unique per canon_url
-        # (deduped), so it IS the round's exact seen-delta
-        seen_delta = batch.select("url_hash", "canon_url")
-        next_frontier = expand(batch)
-        if reprioritize is not None:
-            next_frontier = reprioritize(next_frontier)
-        fetch_log = batch.select(
-            F.lit(rid).alias("round"), "fetch_order", "canon_url", "url_hash", "host", "priority"
         )
-        metrics = round_metrics(rid, batch, seen_delta)
-        store.commit(
-            rid,
-            {
-                "frontier": next_frontier,
-                "seen_delta": seen_delta,
-                "fetch_log": fetch_log,
-                "metrics": metrics,
-                table: (
-                    update_seen_bloom(sketch, seen_delta, bloom_partitions, bloom_bits)
-                    if is_bloom
-                    else _cuckoo.update_seen_cuckoo(
-                        sketch, seen_delta, bloom_partitions, cuckoo_nbuckets
-                    )
-                ),
-            },
-        )
-        if compact_every and (rid - start) % compact_every == 0:
-            # bucket count = shuffle partitions -> the next round's
-            # candidate-side exchange (dedup groupBy, same keys) is
-            # directly compatible with the base's bucketing
-            store.compact_seen(
-                spark,
-                buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                bucketed=True,
-            )
-        # reload from the snapshot so each round's lineage is rooted in
-        # committed files, not an ever-deepening in-memory plan
-        seen_base, seen, nbuckets = store.load_seen_split(spark, rid)
-        frontier = store.load(spark, "frontier", rid)
-        sketch = store.load(spark, table, rid)
-        batch.unpersist()
-        release_rank_caches()
-        last = rid
-    return {"final_round": last or start, "store": store.base}
+    return {"final_round": max(start, rounds), "store": store.base}

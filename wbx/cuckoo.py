@@ -36,6 +36,11 @@ out — the per-candidate path must never leave the JVM):
   therefore only ever ADMIT candidates to the exact check — bit-identical
   final results by construction, like the Bloom path.
 
+The table is a membership sketch like the Bloom's: pass it as
+``frontier.SeenSet(seen, sketch=table)`` to ``frontier.filter_unseen`` or
+``frontier.crawl_round``, which pick the probe from its ``cuckoo_part``
+column.  The crawl loops keep the Bloom (they never delete a key).
+
 The reference (a single-process WARC toolkit) has no seen-set at all; this
 module is engine-native north_rule surface, not parity
 (ref src/warcbench/utils.py keeps per-run Python sets).
@@ -367,35 +372,3 @@ def cuckoo_might_contain(
         .drop("_cp", "_nb", "_fb", "_sat", "_fps")
     )
 
-
-def filter_unseen_with_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    cuckoo: DataFrame,
-    partitions: int = 64,
-    mode: str = "broadcast",
-    seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
-) -> DataFrame:
-    """Cuckoo fast path + exact anti-join confirm — bit-identical to
-    frontier.filter_unseen (the sketch only admits, never drops; see
-    filter_unseen_with_bloom for the shared persist rationale).
-
-    ``seen_base``/``base_buckets``: compacted bucketed base; ``seen`` is
-    then the recent deltas only and the confirm runs shuffle-free on the
-    cumulative set via frontier.filter_unseen_split."""
-    from pyspark import StorageLevel
-
-    from wbx import frontier as _frontier
-
-    tagged = cuckoo_might_contain(candidates, cuckoo, partitions, mode).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _frontier._register_rank_cache(tagged)
-    definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    if seen_base is not None:
-        return definite.unionByName(
-            _frontier.filter_unseen_split(maybe, seen_base, seen, base_buckets)
-        )
-    return definite.unionByName(_frontier.filter_unseen(maybe, seen))

@@ -15,7 +15,7 @@ partition-iteration order.** Every ordering below is an explicit
 Scale design (10^10-URL frontier):
 - the seen-set is hash-partitioned by ``url_hash``; membership is an
   anti-join that shuffles only (url_hash, canon_url) — 16 bytes + url — not
-  payloads. A Bloom-filter pre-pass (``seen_bloom_prefilter``) drops the
+  payloads. A Bloom-filter pre-pass (``SeenSet.sketch``) drops the
   vast majority of already-seen URLs *before* the shuffle; the anti-join
   then restores exactness (Bloom false positives are re-checked, never
   dropped: the sketch only ever *admits* candidates).
@@ -33,6 +33,7 @@ Scale design (10^10-URL frontier):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -662,7 +663,7 @@ def bloom_might_contain(
     with NO shuffle at all. mode="copartition" (the 10^10 path, where the
     filters are too big to broadcast): a plain shuffle join on the hash
     partition — each filter row crosses the wire once per partition, never
-    the driver. mode="auto" (crawl_round's default): pick by the filters'
+    the driver. mode="auto" (what filter_unseen uses): pick by the filters'
     actual total size (one P-row aggregate). All modes are bit-identical
     (tested)."""
     if mode == "auto":
@@ -703,37 +704,83 @@ def bloom_might_contain(
     )
 
 
-def bloom_might_contain_copartitioned(
-    candidates: DataFrame, bloom: DataFrame, partitions: int = 64
-) -> DataFrame:
-    """Scale-path alias: see bloom_might_contain(mode="copartition")."""
-    return bloom_might_contain(candidates, bloom, partitions, "copartition")
+@dataclass(frozen=True)
+class SeenSet:
+    """A crawl's URL-seen set as one membership input of
+    :func:`filter_unseen` and :func:`crawl_round`.
+
+    ``recent``: (url_hash, canon_url) keys; the whole set when ``base`` is
+    None, else only the keys added since ``base`` was compacted.
+    ``base``: the compacted bucketed base
+    (CheckpointStore.compact_seen(bucketed=True)), or None.
+    ``sketch``: a per-hash-partition filter over every key of the set,
+    either Bloom (build_seen_bloom / update_seen_bloom, rows keyed by
+    ``bloom_part``) or cuckoo (wbx.cuckoo, keyed by ``cuckoo_part``), or
+    None. ``partitions``: the sketch's hash-partition count.
+
+    CheckpointStore.load_seen_set builds one from a committed store."""
+
+    recent: DataFrame
+    base: DataFrame | None = None
+    sketch: DataFrame | None = None
+    partitions: int = 64
 
 
-def filter_unseen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+def filter_unseen(candidates: DataFrame, seen: DataFrame | SeenSet) -> DataFrame:
     """Exact frontier ∖ seen: left_anti on (url_hash, canon_url).
 
     Joining on BOTH the 64-bit hash and the string keeps exactness under
     hash collision; the shuffle key (url_hash) is uniform by construction —
-    no skew, no salting needed here."""
-    return candidates.join(
-        seen.select("url_hash", "canon_url"), ["url_hash", "canon_url"], "left_anti"
+    no skew, no salting needed here. A bare DataFrame is ``SeenSet(seen)``.
+
+    With ``seen.base`` the anti-join chains base then recent
+    (:func:`filter_unseen_split`), so the cumulative set joins off its
+    bucketed scan without an exchange.
+
+    With ``seen.sketch`` candidates are first tagged by the sketch (family
+    read from its schema; filters broadcast while they fit, copartitioned
+    beyond — :func:`bloom_might_contain` mode "auto"): the definitely-unseen
+    majority skips the anti-join entirely and only the maybe-seen minority
+    (true hits + false positives) is confirmed exactly. The sketch only ever
+    ADMITS candidates to the exact check, so the result is bit-identical to
+    the plain anti-join. The tagged set is persisted: the definite and
+    maybe branches both consume it, and without a shared materialization
+    each would recompute the entire upstream pipeline (column pruning
+    rewrites the branches differently, so ReuseExchange does not fire;
+    measured 2x the whole round). It is registered with the rank-cache
+    release lifecycle (release_rank_caches / FIFO-capped backstop)."""
+    if isinstance(seen, DataFrame):
+        seen = SeenSet(seen)
+    if seen.sketch is None:
+        return filter_unseen_split(candidates, seen.base, seen.recent)
+    from pyspark import StorageLevel
+
+    if "cuckoo_part" in seen.sketch.columns:
+        from wbx.cuckoo import cuckoo_might_contain as might_contain
+    else:
+        might_contain = bloom_might_contain
+    tagged = might_contain(candidates, seen.sketch, seen.partitions, "auto").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    _register_rank_cache(tagged)
+    definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+    return definite.unionByName(filter_unseen_split(maybe, seen.base, seen.recent))
 
 
 def filter_unseen_split(
     candidates: DataFrame,
     seen_base: DataFrame | None,
     seen_recent: DataFrame,
-    base_buckets: int | None = None,
     broadcast_recent: bool | None = None,
 ) -> DataFrame:
     """Exact frontier ∖ seen against a COMPACTED seen-set: chained
     anti-joins, base then recent. Identical results to
     ``filter_unseen(candidates, base ∪ recent)`` — an anti-join distributes
-    over a union of the right side — pinned by tests.
+    over a union of the right side — pinned by tests. With no base it is
+    the plain anti-join against ``seen_recent``.
 
-    Why the split exists (the 10^10-row design point): ``filter_unseen``
+    Why the split exists (the 10^10-row design point): the plain anti-join
     shuffles the ENTIRE cumulative seen table every round, and that table
     grows with crawl age — at 10^10 keys the seen side alone is ~1 TB of
     exchange per round, dwarfing the candidate batch. With the base stored
@@ -751,76 +798,17 @@ def filter_unseen_split(
     (≤ compaction interval × batch size), so their anti-join broadcasts.
     Per-round network cost becomes O(candidates), constant in crawl age.
 
-    ``base_buckets``: pass the table's bucket count to pre-partition the
-    candidate side ONCE on the bucket keys; its exchange then lines up
-    with the bucketed scan deterministically instead of trusting the
-    planner's side choice (leave None when the candidate side already
-    arrives hash-partitioned on these keys, e.g. out of crawl_round's
-    dedup). ``broadcast_recent``: True forces the hint, None lets AQE
-    decide from measured size (the conditional-broadcast policy used
-    across this module)."""
+    ``broadcast_recent``: True forces the hint on the recent side of a
+    split set, None lets AQE decide from measured size (the
+    conditional-broadcast policy used across this module)."""
+    keys = ["url_hash", "canon_url"]
+    recent = seen_recent.select(*keys)
     if seen_base is None:
-        return filter_unseen(candidates, seen_recent)
-    left = candidates
-    if base_buckets is not None:
-        left = left.repartition(
-            base_buckets, F.col("url_hash"), F.col("canon_url")
-        )
-    base_kept = left.join(
-        seen_base.select("url_hash", "canon_url"),
-        ["url_hash", "canon_url"],
-        "left_anti",
-    )
-    recent = seen_recent.select("url_hash", "canon_url")
+        return candidates.join(recent, keys, "left_anti")
+    base_kept = candidates.join(seen_base.select(*keys), keys, "left_anti")
     if broadcast_recent:
         recent = F.broadcast(recent)
-    return base_kept.join(recent, ["url_hash", "canon_url"], "left_anti")
-
-
-def filter_unseen_with_bloom(
-    candidates: DataFrame, seen: DataFrame, bloom: DataFrame, partitions: int = 64,
-    mode: str = "broadcast",
-    seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
-) -> DataFrame:
-    """Bloom fast path + exact anti-join confirm.
-
-    definitely-unseen rows (bloom miss) skip the shuffle entirely; only the
-    maybe-seen minority (true hits + ~1% false positives) is anti-joined.
-    Result is bit-identical to :func:`filter_unseen` — the sketch only ever
-    ADMITS candidates to the exact check, never drops them. `mode` picks the
-    filter-distribution strategy (broadcast vs copartition vs auto), see
-    :func:`bloom_might_contain`.
-
-    With ``seen_base`` (a compacted bucketed base from
-    CheckpointStore.attach_seen_base), ``seen`` is the RECENT post-
-    compaction deltas only, and the exact confirm runs via
-    :func:`filter_unseen_split` — sketch-pruned AND shuffle-free on the
-    cumulative set.
-
-    The tagged set is persisted: the definite and maybe branches both
-    consume it, and without a shared materialization each would recompute
-    the entire upstream pipeline (canonicalize + dedup of every candidate —
-    column pruning rewrites the branches differently, so ReuseExchange does
-    not fire; measured 2x the whole round). Registered with the same
-    release lifecycle as the rank caches (release_rank_caches /
-    FIFO-capped backstop).
-    """
-    from pyspark import StorageLevel
-
-    tagged = bloom_might_contain(candidates, bloom, partitions, mode).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _register_rank_cache(tagged)
-    definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    if seen_base is not None:
-        # compacted store: the maybe-minority confirms against the bucketed
-        # base co-located + the small recent deltas (filter_unseen_split)
-        return definite.unionByName(
-            filter_unseen_split(maybe, seen_base, seen, base_buckets)
-        )
-    return definite.unionByName(filter_unseen(maybe, seen))
+    return base_kept.join(recent, keys, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -1635,69 +1623,54 @@ def schedule_fetch_batch(
 
 def crawl_round(
     candidates: DataFrame,
-    seen: DataFrame,
+    seen: DataFrame | SeenSet,
     hosts: DataFrame,
     robots: DataFrame | None = None,
     batch_size: int | None = None,
     default_budget: int = 10,
-    bloom: DataFrame | None = None,
-    bloom_partitions: int = 64,
-    bloom_mode: str = "auto",
     broadcast_small: bool | None = None,
-    cuckoo: DataFrame | None = None,
     rank_boundary_cache: dict | None = None,
-    seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
     robots_style: str = "prefix",
     politeness_scope: str = "host",
     politeness_salt: int = 0,
-    dedup_first: bool = False,
-    seen_join: str = "shuffle_hash",
 ) -> DataFrame:
     """candidates(url, priority) → ordered fetch batch.
 
-    canonicalize → dedup (max priority per canon_url, deterministic) →
-    seen anti-join (Bloom-prefiltered when a sketch is supplied) → robots →
-    politeness → deterministic priority order.
+    canonicalize → seen membership + dedup (max priority per canon_url,
+    deterministic) → robots → politeness → deterministic priority order.
     Returns (canon_url, url_hash, host, priority, fetch_order).
+
+    ``seen``: the seen set, a :class:`SeenSet` or a bare (url_hash,
+    canon_url) DataFrame (= ``SeenSet(seen)``). Its kind fixes the order of
+    the membership and dedup stages; both orders give the same batch,
+    because an anti-join keeps or drops all duplicate rows of a group
+    together, so max(priority) per group is unchanged:
+
+    - plain (no base, no sketch): the anti-join runs on the raw
+      canonicalized rows with a SHUFFLE_HASH hint — the seen side builds a
+      per-partition hash table, no sort on either side (guide §3.1;
+      per-partition build memory is seen_bytes / shuffle partitions) — and
+      the max-priority dedup aggregates after it, reusing the join's
+      (url_hash, canon_url) clustering: one exchange, one aggregate pass
+      over only the unseen survivors.
+    - with a compacted base or a sketch: dedup first, then
+      :func:`filter_unseen`. The sketch then probes each canon_url once,
+      and the dedup exchange lines up with the bucketed base's
+      partitioning, so the cumulative set never shuffles.
+
+    Either way dedup and membership share ONE exchange of the candidate set
+    (the dedup groupBy keys are exactly the anti-join keys). `host` is
+    functionally dependent on canon_url and is (re)derived as a map
+    expression after the exchange instead of riding through it.
 
     ``robots_style``: 'prefix' (default — the reference-parity
     longest-prefix semantics the oracle pins) or 'wildcard' (Google-REP
     '*'/'$' patterns via apply_robots_wildcard; same join plan).
-
-    Shuffle plan (scale-critical): dedup and membership share ONE
-    exchange of the candidate set because the dedup groupBy keys are
-    exactly the anti-join keys (url_hash, canon_url). In the default
-    plain-path order (see ``dedup_first``) the anti-join's
-    HashPartitioning feeds the aggregate; in dedup-first order the
-    aggregate's feeds the join — either way the candidates cross the
-    wire once. `host` is functionally dependent on canon_url and is
-    (re)derived as a map expression after the exchange instead of riding
-    through it.
-
-    ``bloom``: per-partition seen-set Bloom filters (build_seen_bloom /
-    update_seen_bloom — run_crawl maintains them incrementally per round).
-    With the sketch, the definitely-unseen majority of candidates skips the
-    anti-join against the 10^10-row seen table entirely; only the maybe-seen
-    minority is confirmed exactly, so the result is bit-identical either
-    way. Default distribution mode is "auto" — shuffle-free broadcast while
-    the filters fit, copartition (no driver collect) at 10^10 scale.
     ``broadcast_small`` is the robots/hosts join hint (see apply_robots).
-
-    ``cuckoo``: the deletable seen-sketch alternative (wbx.cuckoo — pick it
-    when the crawl retracts URLs: recrawl marks, blocklist reversals).
-    Mutually exclusive with ``bloom``; shares the partition-count and
-    distribution-mode knobs.
 
     ``rank_boundary_cache``: pass one dict across rounds to reuse the
     scheduler's rank boundaries (see global_rank) — warm rounds then run
     as a single Spark action with no driver-side pre-jobs.
-
-    ``seen_base`` / ``base_buckets``: a COMPACTED bucketed seen base
-    (CheckpointStore.attach_seen_base); ``seen`` is then only the recent
-    post-compaction deltas, and the exact membership check runs through
-    :func:`filter_unseen_split` — the cumulative set never shuffles.
-    Bit-identical to passing the full union as ``seen``.
 
     ``politeness_scope``: 'host' (default — budgets per raw host) or
     'registered_domain' (budgets per eTLD+1 via
@@ -1712,43 +1685,14 @@ def crawl_round(
     planner into a no-spread extra sort, so this default changes the
     physical plan from [sort+window+sort+window] to [sort+window] on the
     same single exchange — strictly less work at any scale until a single
-    reducer's host volume is the straggler).
-
-    ``dedup_first``: plain-path aggregation order. Default False — the
-    seen anti-join runs on the raw canonicalized rows and the max-priority
-    dedup aggregates AFTER it, reusing the join's (url_hash, canon_url)
-    clustering: one exchange, one aggregate pass over only the unseen
-    survivors, and no 6M-row pre-join hash map build. True restores
-    aggregate-before-join (partial map-side dedup shrinks the exchange
-    when candidate batches carry heavy intra-partition duplication — the
-    right trade when dup_factor × row_width ≫ exchange bandwidth).
-    Results are identical either way: an anti-join distributes over the
-    duplicate rows of a group (all kept or all dropped together), so
-    max(priority) per group is unchanged (pinned by tests).
-
-    ``seen_join``: strategy hint for the plain-path anti-join.
-    'shuffle_hash' (default) builds a per-partition hash table on the
-    seen side — no sort on either side (guide §3.1); per-partition build
-    memory is seen_bytes / shuffle partitions, so size partitions to the
-    seen set as usual. 'sort_merge' restores the sort-based join
-    (graceful spilling) for deployments that cannot. Any other value ⇒
-    no hint (planner's choice)."""
-    if bloom is not None and cuckoo is not None:
-        raise ValueError("pass at most one seen-sketch (bloom or cuckoo)")
+    reducer's host volume is the straggler)."""
+    if isinstance(seen, DataFrame):
+        seen = SeenSet(seen)
     canon = with_canon_url(candidates.select("url", "priority")).select(
         "canon_url", "priority"
     ).withColumn("url_hash", url_hash(F.col("canon_url")))
-    plain = bloom is None and cuckoo is None and seen_base is None
-    if plain and not dedup_first:
-        # membership-then-dedup: SHUFFLE_HASH keeps the big anti-join
-        # sort-free (guide §3.1 — the seen side builds a per-partition
-        # hash table instead of both sides paying a full sort; AQE still
-        # re-plans partition counts). The groupBy after the join needs no
-        # exchange: hashpartitioning(url_hash, canon_url) from the join
-        # already satisfies the aggregate's clustering.
-        seen_side = seen.select("url_hash", "canon_url")
-        if seen_join in ("shuffle_hash", "sort_merge"):
-            seen_side = seen_side.hint(seen_join)
+    if seen.base is None and seen.sketch is None:
+        seen_side = seen.recent.select("url_hash", "canon_url").hint("shuffle_hash")
         kept = canon.join(seen_side, ["url_hash", "canon_url"], "left_anti")
         unseen = kept.groupBy("url_hash", "canon_url").agg(
             F.max("priority").alias("priority")
@@ -1757,22 +1701,7 @@ def crawl_round(
         deduped = canon.groupBy("url_hash", "canon_url").agg(
             F.max("priority").alias("priority")
         )
-        if bloom is not None:
-            unseen = filter_unseen_with_bloom(
-                deduped, seen, bloom, bloom_partitions, bloom_mode,
-                seen_base=seen_base, base_buckets=base_buckets,
-            )
-        elif cuckoo is not None:
-            from wbx.cuckoo import filter_unseen_with_cuckoo
-
-            unseen = filter_unseen_with_cuckoo(
-                deduped, seen, cuckoo, bloom_partitions, bloom_mode,
-                seen_base=seen_base, base_buckets=base_buckets,
-            )
-        elif seen_base is not None:
-            unseen = filter_unseen_split(deduped, seen_base, seen, base_buckets)
-        else:
-            unseen = filter_unseen(deduped, seen)
+        unseen = filter_unseen(deduped, seen)
     # url_hash is a pure function of canon_url and nothing between the
     # membership stage and the output projection reads it (politeness
     # derives its salt from xxhash64(canon_url) directly), so it is

@@ -9,6 +9,8 @@ Generated-code cache sized to 1000 classes (Spark's 100 is below one
 archive-query pass), so a warm session reuses its compiled plans.
 Driver JVM C2 thresholds raised tenfold, so lukewarm planner code is not
 recompiled by C2 for many ops into a session.
+Driver heap defaults to half of the host's memory ($WBX_DRIVER_MEMORY
+overrides it).
 """
 
 from __future__ import annotations
@@ -24,6 +26,17 @@ _JIT_OPTIONS = (
     " -XX:Tier4MinInvocationThreshold=6000"
     " -XX:Tier4CompileThreshold=150000"
 )
+
+
+def driver_memory() -> str:
+    """$WBX_DRIVER_MEMORY, else half of the host's physical memory (MemTotal)
+    in MiB as a JVM size: the default driver heap must fit the host and
+    leave room for the Python workers."""
+    mem = os.environ.get("WBX_DRIVER_MEMORY")
+    if mem:
+        return mem
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // (2 << 20)}m"
 
 
 def get_spark(
@@ -55,7 +68,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("WBX_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory())
         # Constraint propagation infers IsNotNull(<full expression>) filters
         # and pushes them through projects, SUBSTITUTING aliases — for the
         # canonicalize_url pipeline that inlines a multi-thousand-node tree

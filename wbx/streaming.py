@@ -228,11 +228,6 @@ def crawl_batch_processor(
     robots: DataFrame | None = None,
     batch_size: int | None = None,
     default_budget: int = 10,
-    use_bloom: bool = True,
-    bloom_partitions: int = 64,
-    bloom_bits: int = 1 << 20,
-    sketch_kind: str = "bloom",
-    cuckoo_nbuckets: int = 1 << 16,
     compact_every: int | None = None,
     robots_style: str = "prefix",
 ):
@@ -240,9 +235,10 @@ def crawl_batch_processor(
     exactly-once replay contract is unit-testable without a running query).
 
     Each micro-batch of discovered candidate (url, priority) rows is
-    scheduled as ONE crawl round with the batch engine's crawl_round —
-    identical canonicalization, seen anti-join (Bloom-prefiltered), robots,
-    politeness and deterministic ordering — and committed atomically to the
+    scheduled as ONE crawl round by the batch loop's own step
+    (wbx.checkpoint.crawl_step) — identical canonicalization, membership
+    against the store's SeenSet (Bloom-prefiltered), robots, politeness and
+    deterministic ordering — and committed atomically to the
     CheckpointStore as {seen_delta, fetch_log, metrics, seen_bloom,
     stream_marker}.
 
@@ -254,29 +250,13 @@ def crawl_batch_processor(
     atomic rename — a crash mid-commit leaves the prior round visible and
     the replay re-runs cleanly).
 
-    ``sketch_kind``: "bloom" (default) or "cuckoo" — same sketch families
-    and O(batch) incremental maintenance as batch run_crawl.
-
-    ``compact_every``: every K committed rounds, fold the seen deltas into
-    a bucketed base (compact_seen(bucketed=True)) and confirm membership
-    through the shuffle-free split path — same contract and bit-identical
-    results as batch run_crawl(compact_every=K). Compaction runs AFTER the
-    round commits, so a crash between commit and compaction just retries
-    the compaction next round; the replay guard is unaffected."""
-    from wbx import cuckoo as _cuckoo
-    from wbx.checkpoint import round_metrics
-    from wbx.frontier import (
-        build_seen_bloom,
-        crawl_round,
-        empty_seen_bloom,
-        release_rank_caches,
-        update_seen_bloom,
-    )
-
-    if sketch_kind not in ("bloom", "cuckoo"):
-        raise ValueError("sketch_kind must be bloom | cuckoo")
-    is_bloom = sketch_kind == "bloom"
-    table = "seen_bloom" if is_bloom else "seen_cuckoo"
+    ``compact_every``: every K-th round, fold the seen deltas into a
+    bucketed base (compact_seen(bucketed=True)) and confirm membership
+    through the shuffle-free split path — same contract, same rounds and
+    bit-identical results as batch run_crawl(compact_every=K). Compaction
+    runs AFTER the round commits, so the replay guard is unaffected by a
+    crash between the two."""
+    from wbx.checkpoint import crawl_step
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -291,73 +271,22 @@ def crawl_batch_processor(
             marker = store.load(spark, "stream_marker", prev).first()
             if marker is not None and marker["batch_id"] == batch_id:
                 return  # replay of the already-committed epoch
-        if prev == 0:
-            seen_base, nbuckets = None, 0
-            seen = spark.createDataFrame([], "url_hash long, canon_url string")
-            sketch = (
-                empty_seen_bloom(spark)
-                if is_bloom
-                else _cuckoo.empty_seen_cuckoo(spark)
-            )
-        else:
-            seen_base, seen, nbuckets = store.load_seen_split(spark)
-            if store.has_table(table, prev):
-                sketch = store.load(spark, table, prev)
-            elif is_bloom:
-                sketch = build_seen_bloom(store.load_seen(spark), bloom_partitions)
-            else:
-                sketch = _cuckoo.build_seen_cuckoo(
-                    store.load_seen(spark), bloom_partitions, nbuckets=cuckoo_nbuckets
-                )
-        rid = prev + 1
-        batch = crawl_round(
+        crawl_step(
+            store,
+            prev + 1,
             batch_df,
-            seen,
             hosts,
-            robots,
-            batch_size,
-            default_budget,
-            bloom=sketch if (use_bloom and is_bloom) else None,
-            bloom_partitions=bloom_partitions,
-            cuckoo=sketch if (use_bloom and not is_bloom) else None,
-            seen_base=seen_base,
-            robots_style=robots_style,
-        ).persist()
-        seen_delta = batch.select("url_hash", "canon_url")
-        fetch_log = batch.select(
-            F.lit(rid).alias("round"),
-            "fetch_order",
-            "canon_url",
-            "url_hash",
-            "host",
-            "priority",
-        )
-        store.commit(
-            rid,
-            {
-                "seen_delta": seen_delta,
-                "fetch_log": fetch_log,
-                "metrics": round_metrics(rid, batch, seen_delta),
-                table: (
-                    update_seen_bloom(sketch, seen_delta, bloom_partitions, bloom_bits)
-                    if is_bloom
-                    else _cuckoo.update_seen_cuckoo(
-                        sketch, seen_delta, bloom_partitions, cuckoo_nbuckets
-                    )
-                ),
+            compact_every,
+            lambda _: {
                 "stream_marker": spark.createDataFrame(
                     [(int(batch_id),)], "batch_id long"
-                ),
+                )
             },
+            robots=robots,
+            batch_size=batch_size,
+            default_budget=default_budget,
+            robots_style=robots_style,
         )
-        if compact_every and rid % compact_every == 0:
-            store.compact_seen(
-                spark,
-                buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                bucketed=True,
-            )
-        batch.unpersist()
-        release_rank_caches()
 
     return process
 

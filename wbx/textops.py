@@ -202,50 +202,18 @@ def minhash_signatures_items(
     )
 
 
-def _pair_ids(pairs: DataFrame, id_col: str) -> DataFrame:
-    """Distinct ids occurring on either side of a candidate-pair table —
-    the semi-join prefilter key set of the verify stages (guide §3.2)."""
-    return (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-
-
-def _staged_pairs(pairs: DataFrame) -> DataFrame:
-    """Persist a candidate-pair table consumed twice by a verify stage
-    (once to derive the prefilter id set, once as the join probe): the
-    pair-generation lineage (signatures → banding → distinct) is the
-    expensive upstream, and without a shared materialization each
-    consumer would re-execute it. Registered with the frontier rank-cache
-    registry so release_rank_caches()/the FIFO cap reclaims it."""
-    from pyspark import StorageLevel
-
-    from wbx.frontier import _register_rank_cache
-
-    staged = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    _register_rank_cache(staged)
-    return staged
-
-
 def jaccard_verify_item_pairs(
     items: DataFrame,
     pairs: DataFrame,
     id_col: str,
     item_col: str,
     threshold: float = 0.8,
-    prefilter_ids: bool = False,
 ) -> DataFrame:
     """Exact set-Jaccard verification of candidate (id_a, id_b) pairs over
     atomic item sets: (id_a, id_b, intersection, n_a, n_b, jaccard),
     jaccard ≥ threshold. Items are xxhash64'd before the distinct and the
     joins (shuffles carry (id, int64) only — same collision argument as
-    jaccard_verify_pairs). ``prefilter_ids``: optionally cut the item
-    table to ids occurring in ``pairs`` first — the 10^10-id regime knob;
-    see jaccard_verify_pairs for the measured trade."""
-    if prefilter_ids:
-        pairs = _staged_pairs(pairs)
-        items = items.join(_pair_ids(pairs, id_col), [id_col], "left_semi")
+    jaccard_verify_pairs)."""
     hashed = items.select(
         F.col(id_col), F.xxhash64(F.col(item_col)).alias("_item")
     ).distinct()
@@ -337,7 +305,6 @@ def jaccard_verify_pairs(
     id_col: str = "doc_id",
     shingle_size: int = 3,
     threshold: float = 0.8,
-    prefilter_ids: bool = False,
 ) -> DataFrame:
     """Exact shingle-Jaccard verification of candidate pairs.
 
@@ -349,25 +316,7 @@ def jaccard_verify_pairs(
     dominant shuffle of the verify stage shrinks ~3×. Jaccard over hashes
     equals Jaccard over strings unless two DIFFERENT shingles of a compared
     pair collide in 64 bits (P ≈ |union|²/2⁶⁵ per pair — negligible at any
-    corpus size that fits a cluster).
-
-    ``prefilter_ids`` (r6, guide §3.2; output-identical either way): cut
-    ``documents`` to ids occurring in ``pairs`` first (broadcast-eligible
-    semi join over a persisted pairs table), so the shingle explode, the
-    distinct and all three joins run over the candidate slice instead of
-    the corpus. Only the distinct actually shuffles corpus-proportional
-    bytes without it (AQE broadcasts the tiny pair side of every join),
-    so this is the knob for the 10^10-doc regime where an O(corpus)
-    distinct per verify is the wall; default off because the pairs
-    lineage then materializes on the critical path twice (id set +
-    probe), which costs more than the pruning saves whenever candidates
-    are NOT vanishingly rare (measured 4.1s → 6.8s on the 5k-doc bench
-    corpus at local[32])."""
-    if prefilter_ids:
-        pairs = _staged_pairs(pairs)
-        documents = documents.join(
-            _pair_ids(pairs, id_col), [id_col], "left_semi"
-        )
+    corpus size that fits a cluster)."""
     shingled = documents.select(
         F.col(id_col),
         F.explode(
