@@ -198,16 +198,33 @@ class TestSeenSet:
         for part in range(3):
             delta = seen.filter(F.pmod(F.abs(F.col("url_hash")), F.lit(3)) == part)
             bloom = frontier.update_seen_bloom(bloom, delta, partitions=8, m=1 << 12)
-        via = sorted(
-            r["canon_url"]
-            for r in frontier.filter_unseen(
-                cand, frontier.SeenSet(seen, sketch=bloom, partitions=8)
-            ).collect()
-        )
         exact = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
         )
+        sketched = frontier.SeenSet(seen, sketch=bloom, partitions=8)
+        via = sorted(
+            r["canon_url"] for r in frontier.filter_unseen(cand, sketched).collect()
+        )
         assert via == exact
+        # the same maintained sketch through the copartition leg, which
+        # auto picks at scale: forced, it must filter and tag exactly alike
+        import wbx.frontier as fr
+
+        saved = fr._BLOOM_BROADCAST_MAX_BYTES
+        fr._BLOOM_BROADCAST_MAX_BYTES = 0
+        try:
+            via_co = sorted(
+                r["canon_url"]
+                for r in frontier.filter_unseen(cand, sketched).collect()
+            )
+        finally:
+            fr._BLOOM_BROADCAST_MAX_BYTES = saved
+        assert via_co == exact
+        t_b = frontier.bloom_might_contain(cand, bloom, 8, mode="broadcast")
+        t_c = frontier.bloom_might_contain(cand, bloom, 8, mode="copartition")
+        b = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_b.collect())
+        c = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_c.collect())
+        assert b == c
 
     def test_salted_politeness_cap_bit_identical(self, spark):
         # the two-phase skew-safe form must keep exactly the rows of the
