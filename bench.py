@@ -41,7 +41,7 @@ def get_session():
         shuffle_partitions=CPUS,
         extra_conf={
             # archive rows are fat (MBs of binary); small scan splits keep
-            # the mapInPandas parse fanned out without an explicit (and
+            # the mapInArrow parse fanned out without an explicit (and
             # untimed-unrealistic) repartition shuffle of the payload bytes
             "spark.sql.files.maxPartitionBytes": "8m",
             "spark.ui.showConsoleProgress": "false",
@@ -169,14 +169,6 @@ def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[fl
 
     cand = spark.read.parquet(os.path.join(base, "candidates"))
     seen = spark.read.parquet(os.path.join(base, "seen"))
-    # compacted-store mode: membership confirms against the bucketed base
-    # (zero-exchange join side; see wbx.frontier.filter_unseen_split) with
-    # an empty recent-delta side — the steady-state shape of a crawl that
-    # compacts every K rounds. Output is bit-identical (split parity tests).
-    seen_base = None
-    if os.environ.get("SPARK_GRAFT_SEEN_BASE", "0") == "1":
-        seen_base = spark.table("wbx_bench_seen_base")
-        seen = seen.limit(0)
     hosts = spark.range(1200).selectExpr(
         "concat('host', id, '.example.com') AS host", "CAST(500 AS INT) AS budget"
     )
@@ -195,11 +187,22 @@ def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[fl
     # the sketch pays in the 10^10-seen regime where it prunes the seen-side
     # probe; at bench scale (3M seen keys) the map-side Arrow check costs
     # more than the anti-join it saves — measured, see BENCH/BASELINE.md.
+    # The sketch covers the FULL seen set, base keys included: built from
+    # the recent side alone it would miss the base, and the round would
+    # schedule seen URLs.
     use_bloom = os.environ.get("SPARK_GRAFT_BLOOM", "0") == "1"
     bloom = None
     if use_bloom:
         bloom = build_seen_bloom(seen, partitions=64).persist()
         bloom.count()
+    # compacted-store mode: membership confirms against the bucketed base
+    # (zero-exchange join side; see wbx.frontier.filter_unseen_split) with
+    # an empty recent-delta side — the steady-state shape of a crawl that
+    # compacts every K rounds. Output is bit-identical (split parity tests).
+    seen_base = None
+    if os.environ.get("SPARK_GRAFT_SEEN_BASE", "0") == "1":
+        seen_base = spark.table("wbx_bench_seen_base")
+        seen = seen.limit(0)
     t0 = time.time()
     out = crawl_round(
         cand, SeenSet(seen, seen_base, bloom), hosts, robots, default_budget=500,

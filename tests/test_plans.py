@@ -43,6 +43,42 @@ class TestScanPushdown:
         assert "doc_id" in read and "text" not in read
 
 
+class TestWarcScanKernel:
+    """Every WARC scan — whole-file, split, index and streaming — runs as
+    one mapInArrow kernel; no pandas copy of the scan may come back."""
+
+    @pytest.mark.parametrize(
+        "scan",
+        [
+            "scan_files_to_records",
+            "scan_files_to_text",
+            "scan_files_to_unparsable",
+            "scan_files_to_diagnostics",
+            "scan_splits_to_records",
+            "scan_splits_to_text",
+            "scan_splits_to_unparsable",
+            "scan_splits_to_diagnostics",
+            "index_gzip_splits",
+            "stream_file_records",
+            "stream_file_text",
+            "stream_split_text",
+        ],
+    )
+    def test_scan_is_map_in_arrow(self, spark, tmp_path, scan):
+        from wbx import streaming, warcio
+        from wbx.schema import ARCHIVE_SPLITS
+
+        if scan.startswith("stream_"):
+            df = getattr(streaming, scan)(spark, str(tmp_path))
+        elif scan.startswith("scan_splits_"):
+            df = getattr(warcio, scan)(spark.createDataFrame([], ARCHIVE_SPLITS))
+        else:
+            files = spark.createDataFrame([], "source_file string, content binary")
+            df = getattr(warcio, scan)(files)
+        plan = plan_str(df)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+
 class TestJoinStrategies:
     def test_brute_force_topk_broadcasts_query_side(self, spark):
         from wbx import simsearch

@@ -39,6 +39,11 @@ def run_available_now(stream_df, name, output_mode="append"):
 
 class TestStreamScan:
     def test_file_stream_scans_records(self, spark, tmp_path):
+        import gzip
+
+        from wbx.fixtures import rich_record_bytes
+        from wbx.warcio import scan_files_to_records, write_warc_gz
+
         d = tmp_path / "in"
         os.makedirs(d)
         (d / "a.warc").write_bytes(
@@ -47,9 +52,20 @@ class TestStreamScan:
         (d / "b.warc").write_bytes(
             write_warc([make_record(f"https://b/{i}", b"y") for i in range(2)])
         )
+        # a record-gz archive whose LAST gzip member is not WARC: the batch
+        # scan keeps it as an is_warc=false row, so the stream must too
+        (d / "c.warc.gz").write_bytes(
+            write_warc_gz(
+                [rich_record_bytes(1, "one"), rich_record_bytes(2, "two", "request")]
+            )
+            + gzip.compress(b"not a warc at all", mtime=0)
+        )
         recs = streaming.stream_file_records(spark, str(d))
         run_available_now(recs, "recs_mem")
-        got = spark.sql("SELECT target_uri, http_status FROM recs_mem").collect()
+        got = spark.sql(
+            "SELECT target_uri, http_status FROM recs_mem "
+            "WHERE source_file NOT LIKE '%.gz'"
+        ).collect()
         assert len(got) == 5
         assert all(r["http_status"] == 200 for r in got)
         assert sorted(r["target_uri"] for r in got)[:3] == [
@@ -57,6 +73,27 @@ class TestStreamScan:
             "https://a/1",
             "https://a/2",
         ]
+
+        # full row multiset == the batch scan of the same bytes. headers are
+        # compared as JSON of the sorted entries: exceptAll rejects map
+        # columns, and the memory sink does not keep map entry order
+        def rows(df):
+            return df.withColumn(
+                "headers", F.to_json(F.array_sort(F.map_entries("headers")))
+            )
+
+        stream = rows(spark.table("recs_mem"))
+        batch = rows(
+            scan_files_to_records(
+                spark.read.format("binaryFile")
+                .load(str(d))
+                .select(F.col("path").alias("source_file"), "content")
+            )
+        )
+        assert stream.count() == batch.count() == 8
+        assert stream.exceptAll(batch).count() == 0
+        assert batch.exceptAll(stream).count() == 0
+        assert stream.filter(~F.col("is_warc")).count() == 1
 
 
 class TestStreamText:

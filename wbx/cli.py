@@ -44,7 +44,7 @@ def load_records(
 ) -> DataFrame:
     """``columns``: optional pruning set pushed INTO the scan kernel — for
     parquet input Catalyst prunes the scan natively, but a projection can't
-    cross the mapInPandas boundary, so archive scans take it explicitly
+    cross the mapInArrow boundary, so archive scans take it explicitly
     (commands with a closed column set pass it; payload-consuming commands
     like extract keep the full schema).
 

@@ -2,7 +2,8 @@
 
 Local-mode defaults mirror what we'd set fleet-wide on a real cluster:
 AQE on (runtime join re-planning + skew-join splitting for hot domains),
-Arrow transfer on (every byte-level kernel is a pandas UDF), shuffle
+Arrow transfer on (the WARC scans are mapInArrow kernels, the other
+byte-level kernels pandas UDFs), shuffle
 partitions sized to cores rather than the 200 default, UTC session TZ so
 results compare bit-for-bit against the DuckDB oracle.
 Generated-code cache sized to 1000 classes (Spark's 100 is below one

@@ -5,8 +5,9 @@ operators; the crawl pipeline itself deliberately uses deterministic batch
 rounds (crawl-order parity requires deterministic scheduling — see
 wbx.frontier). These streaming forms cover the continuous-ingest side:
 
-- stream_file_records : readStream over a directory of WARC archives →
-  records stream (same Arrow scan kernel as the batch path)
+- stream_file_records / stream_file_text / stream_split_text : readStream
+  sources fed to the batch scan functions of wbx.warcio themselves (one
+  mapInArrow kernel, so stream and batch rows cannot drift)
 - windowed_type_counts: event-time windowed A2 aggregate with watermarked
   late-data handling
 - stateful_pair_match : J1 FIFO request↔response matching as
@@ -27,68 +28,43 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def stream_file_records(
-    spark: SparkSession, path: str, style: str = "content_length"
-) -> DataFrame:
-    """Streaming WARC source: each new file in `path` is scanned into record
-    rows with the same kernel as the batch path (wbx.warcio.scan_warc).
-
-    binaryFile streaming keeps whole files as rows; the gzip member index
-    (warcio.index_gzip_members) is what would split archives beyond one
-    task's memory at production scale.
-    """
-    from wbx.schema import RECORDS
-    from wbx.warcio import _REC_COLUMNS, scan_archive
-
-    binary_file_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    files = (
+def _archive_stream(spark: SparkSession, path: str) -> DataFrame:
+    """readStream over a directory of archives as (source_file, content)
+    rows — the input shape of the batch whole-file scans."""
+    return (
         spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
+        .schema("path string, modificationTime timestamp, length long, content binary")
         .option("pathGlobFilter", "*.{warc,warc.gz,wacz}")
         .load(path)
         .select(F.col("path").alias("source_file"), F.col("content"))
     )
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                result, _non = scan_archive(
-                    bytes(row["content"]), row["source_file"], style
-                )
-                rows.extend(result.records)
-            out = pd.DataFrame(rows, columns=_REC_COLUMNS)
-            if not rows:
-                out = pd.DataFrame({c: pd.Series(dtype=object) for c in _REC_COLUMNS})
-            yield out
 
-    return files.mapInPandas(scan_batches, schema=RECORDS)
+def stream_file_records(
+    spark: SparkSession, path: str, style: str = "content_length"
+) -> DataFrame:
+    """Streaming WARC source: each new file in `path` is scanned into record
+    rows (non-WARC gzip members included) by the batch kernel itself,
+    wbx.warcio.scan_files_to_records.
+
+    binaryFile streaming keeps whole files as rows; stream_split_text is the
+    split-granular form for archives beyond one task's memory."""
+    from wbx.warcio import scan_files_to_records
+
+    return scan_files_to_records(_archive_stream(spark, path), style)
 
 
 def stream_file_text(
     spark: SparkSession, path: str, style: str = "content_length"
 ) -> DataFrame:
     """Streaming form of the fused scan+extract hot path: each new archive
-    file is scanned AND text-extracted in one Python pass (the exact kernel
-    of wbx.warcio.scan_files_to_text), so continuous ingest ships only slim
-    (uri, status, text) columns downstream — payload bytes never cross the
-    Arrow boundary in the stream either."""
-    from wbx.schema import TEXT_RECORDS
-    from wbx.warcio import text_scan_iterator
+    file is scanned AND text-extracted in one Python pass by
+    wbx.warcio.scan_files_to_text itself, so continuous ingest ships only
+    slim (uri, status, text) columns downstream — payload bytes never cross
+    the Arrow boundary in the stream either."""
+    from wbx.warcio import scan_files_to_text
 
-    binary_file_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
-        .option("pathGlobFilter", "*.{warc,warc.gz,wacz}")
-        .load(path)
-        .select(F.col("path").alias("source_file"), F.col("content"))
-    )
-    return files.mapInPandas(text_scan_iterator(style), schema=TEXT_RECORDS)
+    return scan_files_to_text(_archive_stream(spark, path), style)
 
 
 def windowed_type_counts(
@@ -206,15 +182,13 @@ def stream_split_text(
     picks up new split rows and each task ranged-reads ONLY its slice, so
     continuous ingest of multi-GB archives never holds a whole file as one
     row (the binaryFile streaming source's limit) and parse parallelism
-    follows data volume, not file count. Same fused kernel as
-    scan_splits_to_text — payload bytes never cross the Arrow boundary."""
-    from wbx.schema import ARCHIVE_SPLITS, TEXT_RECORDS
-    from wbx.warcio import split_text_iterator
+    follows data volume, not file count. It is scan_splits_to_text over a
+    parquet readStream, so payload bytes never cross the Arrow boundary."""
+    from wbx.schema import ARCHIVE_SPLITS
+    from wbx.warcio import scan_splits_to_text
 
     splits = spark.readStream.schema(ARCHIVE_SPLITS).parquet(splits_path)
-    return splits.mapInPandas(
-        split_text_iterator(style, gz_style, on_error, opener), schema=TEXT_RECORDS
-    )
+    return scan_splits_to_text(splits, style, gz_style, on_error, opener)
 
 
 # ---------------------------------------------------------------------------

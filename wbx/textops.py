@@ -127,14 +127,15 @@ def minhash_signatures(
     Fully per-row since r6 (guide §2.4 — remove shuffles outright): a
     document's shingles all live in its own row, so signature slot i is
     ``array_min(transform(shingle_hashes, h -> xxhash64(h, seed, i)))``
-    — pure Column algebra inside whole-stage codegen, ZERO exchanges and
-    no aggregation hash maps. Values are bit-identical to the previous
-    explode → 64-way-min-aggregate form (min over the same multiset,
-    same xxhash64(shingle_hash, seed, i) per element — pinned by tests),
-    which survives as :func:`minhash_signatures_items` for callers whose
-    items arrive already exploded (e.g. host-mirror digest sets). The
-    shingle-hash array is staged as a real column so the 64 slot
-    expressions reference it instead of re-tokenizing 64 times.
+    — pure Column algebra, ZERO exchanges and no aggregation hash maps.
+    Values are bit-identical to the explode → 64-way-min-aggregate form,
+    :func:`minhash_signatures_items` (min over the same multiset, same
+    xxhash64(shingle_hash, seed, i) per element — pinned by tests). The
+    transform lambdas are higher-order functions and run interpreted
+    (CodegenFallback), measured 2.4× slower per core than that aggregate,
+    so dedup_minhash uses the exploded form. The shingle-hash array is
+    staged as a real column so the 64 slot expressions reference it
+    instead of re-tokenizing 64 times.
 
     Duplicate shingles need no dedup: min over a multiset equals min over
     its set. Deterministic: xxhash64 is a fixed function of
@@ -359,7 +360,6 @@ def dedup_minhash(
     seed: int = 42,
     max_bucket: int | None = 1000,
     precollapse_exact: bool = True,
-    per_row_signatures: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: exact-dup pre-collapse →
     signature → banding (skew-guarded) → exact Jaccard verify. Returns
@@ -374,38 +374,23 @@ def dedup_minhash(
     the aggregate survivor ids so the collapse itself never shuffles text
     (see dedup_exact).
 
-    ``per_row_signatures``: signature evaluation strategy — the VALUES are
-    bit-identical either way (pinned by tests), only the physical plan
-    differs. Default False: shingles explode to (id, shingle) rows and the
-    64 slot minima run as a map-side-combinable codegen'd aggregate
-    (:func:`minhash_signatures_items`); because a document's shingles all
-    live in one scan row, the partial min completes per document BEFORE
-    the exchange, which therefore carries exactly 64 longs per doc — the
-    same order as the banding exchange right after it. True switches to
-    the zero-exchange per-row form (:func:`minhash_signatures`), whose 64
-    array_min/transform lambdas evaluate INTERPRETED (higher-order
-    functions are CodegenFallback) — measured 2.4× slower per core on the
-    5k-doc bench corpus (interleaved A/B, 0.79–1.13s vs 1.93–2.27s for
-    the signature stage) — in exchange for not shuffling at all: the knob
-    for a network-bound cluster where even 64 longs/doc matters."""
+    Signatures come from the exploded form: shingles explode to (id,
+    shingle) rows and the slot minima run as a map-side-combinable
+    codegen'd aggregate (:func:`minhash_signatures_items`). A document's
+    shingles all live in one scan row, so the partial min completes per
+    document BEFORE the exchange, which carries exactly ``num_hashes`` longs
+    per doc — the same order as the banding exchange right after it."""
     if precollapse_exact:
         documents = documents.join(
             dedup_exact_ids(documents, text_col, id_col).select(id_col),
             [id_col],
             "left_semi",
         )
-    if per_row_signatures:
-        sigs = minhash_signatures(
-            documents, text_col, id_col, num_hashes, shingle_size, seed
-        )
-    else:
-        items = documents.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col),
-            F.explode(shingle_array(F.col(text_col), shingle_size)).alias(
-                "_item"
-            ),
-        )
-        sigs = minhash_signatures_items(items, id_col, "_item", num_hashes, seed)
+    items = documents.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col),
+        F.explode(shingle_array(F.col(text_col), shingle_size)).alias("_item"),
+    )
+    sigs = minhash_signatures_items(items, id_col, "_item", num_hashes, seed)
     pairs = minhash_lsh_pairs(sigs, id_col, bands, num_hashes // bands, max_bucket)
     return jaccard_verify_pairs(documents, pairs, text_col, id_col, shingle_size, threshold)
 

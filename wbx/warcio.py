@@ -9,11 +9,12 @@ becomes a two-stage Spark DAG:
           .warc.gz is splittable across tasks (the reference builds the same
           index up-front via a patched gzip reader; here it's a plain
           zlib.decompressobj loop over ``unused_data``);
-  stage 2: record scan — a mapInPandas kernel that carves file bytes into
-          offset-addressed records, with the same two strategies as the
-          reference (content_length: fast, header-driven seek; delimiter:
-          line-walk, robust to broken Content-Length) and the same
-          side-channels (unparsable lines, warnings, parse error).
+  stage 2: record scan — one mapInArrow row kernel that carves file bytes
+          (or one member group's ranged slice) into offset-addressed
+          records, with the same two strategies as the reference
+          (content_length: fast, header-driven seek; delimiter: line-walk,
+          robust to broken Content-Length) and the same side-channels
+          (unparsable lines, warnings, parse error).
 
 Offset conventions match the reference exactly (verified empirically against
 parsers/warc.py:325-508 on synthetic files):
@@ -42,8 +43,6 @@ import zipfile
 import zlib
 from dataclasses import dataclass, field
 from typing import Iterator
-
-import pandas as pd
 
 from wbx.extract import (
     CONTENT_LENGTH_RE,
@@ -93,7 +92,7 @@ def _header_block_end(data: bytes, pos: int) -> int | None:
 
 
 # column-pruning groups: which output columns force which per-record work.
-# Catalyst can't prune a projection through mapInPandas, so the scan kernels
+# Catalyst can't prune a projection through mapInArrow, so the scan kernels
 # accept an explicit `wanted` set (None = everything) and skip building
 # anything no requested column derives from — the Python-boundary analogue
 # of a data source's column pruning.
@@ -1077,109 +1076,110 @@ def open_wacz(data: bytes) -> bytes:
 
 # ---------------------------------------------------------------------------
 # Spark integration
+#
+# Every scan entry point is ONE mapInArrow over the same row kernel
+# (_scan_kernel): it reads each input row straight from the Arrow batch —
+# a whole file, or an ARCHIVE_SPLITS member group ranged-read through
+# `opener` — scans it with the entry point's `wanted` column set, and hands
+# (result, non_warc, source) to a per-output `emit` function. The whole-file
+# and split forms share the emit functions, and the streaming sources
+# (wbx.streaming) call these same functions, so there is one kernel and one
+# parity surface.
 # ---------------------------------------------------------------------------
 
-_REC_COLUMNS = [
-    "source_file",
-    "member_start",
-    "member_end",
-    "unc_start",
-    "unc_end",
-    "record_start",
-    "record_end",
-    "header_start",
-    "header_end",
-    "content_start",
-    "content_end",
-    "warc_version",
-    "headers",
-    "warc_type",
-    "target_uri",
-    "warc_date",
-    "content_type",
-    "content_length",
-    "header_bytes",
-    "content_block",
-    "http_status",
-    "http_verb",
-    "http_content_type",
-    "content_length_ok",
-    "is_warc",
-]
+
+def _record_batch(rows: list[dict], schema):
+    """pyarrow batch of the pyarrow `schema` from dict rows, one pa.array
+    per field; a key a row lacks (e.g. `headers` on a non-WARC member row)
+    is null."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r.get(f.name) for r in rows], type=f.type) for f in schema],
+        schema=schema,
+    )
 
 
-def scan_files_to_records(
-    files_df, style: str = "content_length", columns=None, gz_style: str = "file"
+def _scan_kernel(
+    emit,
+    schema,
+    style: str,
+    wanted: frozenset[str] | None = None,
+    gz_style: str = "file",
+    splits: bool = False,
+    opener=None,
 ):
-    """(source_file string, content binary[, is_gz boolean]) → records DF.
+    """The mapInArrow row kernel behind every WARC scan entry point.
 
-    mapInPandas kernel: each input row is one archive file (or one member
-    range at scale — the member index makes .warc.gz splittable so a 1 GB
-    archive fans out across tasks). All byte work happens executor-side in
-    Arrow batches.
+    An input row is a whole file — (source_file, content[, is_gz]); a null
+    is_gz means False, an absent column lets the file extension decide — or,
+    with ``splits``, an ARCHIVE_SPLITS row whose [comp_start, comp_end)
+    slice is ranged-read and scanned with absolute offsets. Each scan's
+    ``emit(result, non_warc, source)`` rows become one output batch of the
+    Spark ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    ``columns``: optional subset of RECORDS column names to produce. Catalyst
-    cannot prune a projection through the mapInPandas boundary, so a query
-    that only needs e.g. (warc_type, target_uri) should pass them here — the
-    kernel then never slices payload bytes or builds the headers map, and the
-    Arrow transfer shrinks from ~the archive size to a few slim columns."""
-    out_cols, schema, wanted = _records_projection(columns)
-    has_gz = "is_gz" in files_df.columns
+    arrow_schema = to_arrow_schema(schema)
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def kernel(batches):
+        for batch in batches:
+            col = dict(zip(batch.schema.names, batch.columns))
             rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                data = bytes(row["content"])
-                gz_hint = bool(row["is_gz"]) if has_gz else None
-                result, non_warc = scan_archive(
-                    data, row["source_file"], style, gz_hint, wanted, gz_style
-                )
-                rows.extend(result.records)
-                rows.extend(_non_warc_row(m) for m in non_warc)
-            yield _records_frame(rows, out_cols)
+            for i in range(batch.num_rows):
+                source = col["source_file"][i].as_py()
+                if splits:
+                    comp_start = col["comp_start"][i].as_py()
+                    result, non_warc = scan_member_group(
+                        _read_slice(source, comp_start, col["comp_end"][i].as_py(), opener),
+                        source,
+                        comp_start,
+                        col["unc_start"][i].as_py(),
+                        style,
+                        wanted,
+                        gz_style,
+                        col["n_members_total"][i].as_py(),
+                        col["group_id"][i].as_py() == col["n_groups"][i].as_py() - 1,
+                    )
+                else:
+                    gz_hint = bool(col["is_gz"][i].as_py()) if "is_gz" in col else None
+                    result, non_warc = scan_archive(
+                        col["content"][i].as_py(), source, style, gz_hint, wanted, gz_style
+                    )
+                rows.extend(emit(result, non_warc, source))
+            yield _record_batch(rows, arrow_schema)
 
-    return files_df.mapInPandas(scan_batches, schema=schema)
-
-
-def _records_projection(columns):
-    """(out_cols, StructType, wanted) for an optional RECORDS column subset —
-    shared by the whole-file and split scan kernels."""
-    from pyspark.sql import types as T
-
-    from wbx.schema import RECORDS
-
-    if columns is None:
-        return _REC_COLUMNS, RECORDS, None
-    keep = set(columns) | {"source_file", "is_warc"}
-    unknown = keep - set(_REC_COLUMNS)
-    if unknown:
-        raise ValueError(f"unknown record columns: {sorted(unknown)}")
-    out_cols = [c for c in _REC_COLUMNS if c in keep]
-    schema = T.StructType([f for f in RECORDS.fields if f.name in keep])
-    return out_cols, schema, frozenset(out_cols)
+    return kernel
 
 
-def _non_warc_row(m: dict) -> dict:
-    return {
-        "source_file": m["source_file"],
-        "member_start": m["member_start"],
-        "member_end": m["member_end"],
-        "unc_start": m["unc_start"],
-        "unc_end": m["unc_end"],
-        "content_block": m["bytes"],
-        "is_warc": False,
-    }
+def _emit_records(result: ScanResult, non_warc: list[dict], source: str) -> list[dict]:
+    """RECORDS rows: the parsed records, then one is_warc=false row per
+    non-WARC gzip member."""
+    return result.records + [
+        {
+            "source_file": m["source_file"],
+            "member_start": m["member_start"],
+            "member_end": m["member_end"],
+            "unc_start": m["unc_start"],
+            "unc_end": m["unc_end"],
+            "content_block": m["bytes"],
+            "is_warc": False,
+        }
+        for m in non_warc
+    ]
 
 
-def _records_frame(rows: list[dict], out_cols: list[str]) -> pd.DataFrame:
-    if not rows:
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in out_cols})
-    out = pd.DataFrame(rows, columns=out_cols)
-    # keys absent from a row (e.g. `headers` on non-WARC member rows) become
-    # float NaN in pandas; Arrow's map/struct converters choke on NaN — force
-    # object dtype with real Nones
-    return out.astype(object).where(pd.notnull(out), None)
+def _emit_unparsable(result: ScanResult, non_warc: list[dict], source: str) -> list[dict]:
+    return result.unparsable
+
+
+def _emit_diagnostics(result: ScanResult, non_warc: list[dict], source: str) -> list[dict]:
+    rows = [
+        {"source_file": source, "kind": "warning", "message": w}
+        for w in result.warnings
+    ]
+    if result.error:
+        rows.append({"source_file": source, "kind": "error", "message": result.error})
+    return rows
 
 
 # what the fused text kernel needs from the record scan: URI/type for the
@@ -1190,17 +1190,9 @@ _TEXT_WANTED = frozenset(
 )
 
 
-def text_scan_iterator(
-    style: str = "content_length",
-    has_gz: bool = False,
-    gz_style: str = "file",
-    on_error: str = "raise",
-):
-    """The fused scan+extract batch-iterator kernel, shared by the batch
-    (scan_files_to_text) and streaming (wbx.streaming.stream_file_text)
-    forms — one code path, one parity surface.
-
-    ``on_error`` — what a record whose body fails to decode does:
+def _make_text_fn(on_error: str):
+    """Per-record text extractor for the fused kernels. ``on_error`` — what
+    a record whose body fails to decode does:
     - "raise" (default): propagate, reference
       ``get_decompressed_http_body`` parity (the method raises; callers
       choose policy);
@@ -1209,26 +1201,6 @@ def text_scan_iterator(
     - "raw": utf-8-replace of the UNDECODED body, the reference CLI's own
       fallback (scripts/utils.py:80-84 catches and keeps going).
     """
-    _text = _make_text_fn(on_error)
-
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            records: list[dict] = []
-            for _, row in pdf.iterrows():
-                data = bytes(row["content"])
-                gz_hint = bool(row["is_gz"]) if has_gz else None
-                result, _ = scan_archive(
-                    data, row["source_file"], style, gz_hint, _TEXT_WANTED, gz_style
-                )
-                records.extend(result.records)
-            yield _text_frame(records, _text)
-
-    return scan_batches
-
-
-def _make_text_fn(on_error: str):
-    """Per-record text extractor closure for the fused kernels (see
-    text_scan_iterator for the on_error policy table)."""
     from wbx.extract import (
         DecodingError,
         extracted_text,
@@ -1258,91 +1230,56 @@ def _make_text_fn(on_error: str):
     return _text
 
 
-def _text_frame(records: list[dict], text_fn) -> pd.DataFrame:
-    """TEXT_RECORDS-shaped pandas frame from scanned records — the only
-    columns that cross the Arrow boundary in the fused text path."""
-    return pd.DataFrame(
-        {
-            "source_file": pd.Series([r["source_file"] for r in records], dtype=object),
-            "record_start": pd.Series([r["record_start"] for r in records], dtype=object),
-            "record_end": pd.Series([r["record_end"] for r in records], dtype=object),
-            "warc_type": pd.Series([r["warc_type"] for r in records], dtype=object),
-            "target_uri": pd.Series([r["target_uri"] for r in records], dtype=object),
-            "http_status": pd.Series([r["http_status"] for r in records], dtype=object),
-            "text": pd.Series([text_fn(r) for r in records], dtype=object),
-        }
-    )
+def _text_emit(on_error: str):
+    """TEXT_RECORDS emit: each record gains its extracted `text`; the
+    payload bytes stay in the dict and never reach the output batch.
+    Non-WARC gzip members carry no text and are not emitted."""
+    text = _make_text_fn(on_error)
+
+    def emit(result: ScanResult, non_warc: list[dict], source: str) -> list[dict]:
+        for rec in result.records:
+            rec["text"] = text(rec)
+        return result.records
+
+    return emit
 
 
-def _arrow_text_schema(pa):
-    """pyarrow twin of wbx.schema.TEXT_RECORDS for the Arrow-native kernels."""
-    return pa.schema(
-        [
-            ("source_file", pa.string()),
-            ("record_start", pa.int64()),
-            ("record_end", pa.int64()),
-            ("warc_type", pa.string()),
-            ("target_uri", pa.string()),
-            ("http_status", pa.int32()),
-            ("text", pa.string()),
-        ]
-    )
+def _records_projection(columns):
+    """(StructType, wanted) for an optional RECORDS column subset — shared
+    by the whole-file and split record scans."""
+    from pyspark.sql import types as T
+
+    from wbx.schema import RECORDS
+
+    if columns is None:
+        return RECORDS, None
+    keep = set(columns) | {"source_file", "is_warc"}
+    unknown = keep - set(RECORDS.names)
+    if unknown:
+        raise ValueError(f"unknown record columns: {sorted(unknown)}")
+    schema = T.StructType([f for f in RECORDS.fields if f.name in keep])
+    return schema, frozenset(schema.names)
 
 
-def _text_record_batch(records: list[dict], text_fn, pa, schema):
-    """TEXT_RECORDS pyarrow batch from scanned records — pa.array over a
-    Python list is a single C pass where the pandas serializer walks
-    object arrays."""
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([r["source_file"] for r in records], type=pa.string()),
-            pa.array([r["record_start"] for r in records], type=pa.int64()),
-            pa.array([r["record_end"] for r in records], type=pa.int64()),
-            pa.array([r["warc_type"] for r in records], type=pa.string()),
-            pa.array([r["target_uri"] for r in records], type=pa.string()),
-            pa.array([r["http_status"] for r in records], type=pa.int32()),
-            pa.array([text_fn(r) for r in records], type=pa.string()),
-        ],
-        schema=schema,
-    )
-
-
-def text_scan_arrow_iterator(
-    style: str = "content_length",
-    has_gz: bool = False,
-    gz_style: str = "file",
-    on_error: str = "raise",
+def scan_files_to_records(
+    files_df, style: str = "content_length", columns=None, gz_style: str = "file"
 ):
-    """Arrow-native twin of :func:`text_scan_iterator` for the BATCH fused
-    path (guide §4.1): consumes/produces pyarrow RecordBatches directly,
-    skipping the pandas object-Series detour on both sides of the
-    boundary — the output side carries one string cell per extracted page.
-    Record semantics are byte-identical: the same scan_archive +
-    _make_text_fn kernel produces the rows (parity pinned by the
-    fused-parity tests). The streaming form keeps the pandas iterator
-    (foreachBatch-free streaming uses mapInPandas)."""
-    import pyarrow as pa
+    """(source_file string, content binary[, is_gz boolean]) → records DF.
 
-    _text = _make_text_fn(on_error)
-    schema = _arrow_text_schema(pa)
+    mapInArrow kernel: each input row is one archive file (or one member
+    range at scale — the member index makes .warc.gz splittable so a 1 GB
+    archive fans out across tasks). All byte work happens executor-side in
+    Arrow batches.
 
-    def scan_batches(batches):
-        for batch in batches:
-            cols = batch.schema.names
-            src = batch.column(cols.index("source_file"))
-            content = batch.column(cols.index("content"))
-            gz = batch.column(cols.index("is_gz")) if has_gz else None
-            records: list[dict] = []
-            for i in range(batch.num_rows):
-                data = content[i].as_py()
-                gz_hint = bool(gz[i].as_py()) if gz is not None else None
-                result, _ = scan_archive(
-                    bytes(data), src[i].as_py(), style, gz_hint, _TEXT_WANTED, gz_style
-                )
-                records.extend(result.records)
-            yield _text_record_batch(records, _text, pa, schema)
-
-    return scan_batches
+    ``columns``: optional subset of RECORDS column names to produce. Catalyst
+    cannot prune a projection through the mapInArrow boundary, so a query
+    that only needs e.g. (warc_type, target_uri) should pass them here — the
+    kernel then never slices payload bytes or builds the headers map, and the
+    Arrow transfer shrinks from ~the archive size to a few slim columns."""
+    schema, wanted = _records_projection(columns)
+    return files_df.mapInArrow(
+        _scan_kernel(_emit_records, schema, style, wanted, gz_style), schema
+    )
 
 
 def scan_files_to_text(
@@ -1362,67 +1299,36 @@ def scan_files_to_text(
     pipeline disappears. Parity with the general path is pinned by
     tests/test_warcio fused-parity tests; extraction semantics are
     wbx.extract.extracted_text (reference models.py:153-170 behavior).
+    ``on_error`` is the undecodable-body policy (raise | null | raw, see
+    _make_text_fn).
 
     Non-WARC gzip members carry no text and are not emitted (the general
     path keeps them as is_warc=false rows; use scan_files_to_records for
     forensics)."""
     from wbx.schema import TEXT_RECORDS
 
-    kernel = text_scan_arrow_iterator(
-        style, "is_gz" in files_df.columns, gz_style, on_error
+    return files_df.mapInArrow(
+        _scan_kernel(_text_emit(on_error), TEXT_RECORDS, style, _TEXT_WANTED, gz_style),
+        TEXT_RECORDS,
     )
-    return files_df.mapInArrow(kernel, schema=TEXT_RECORDS)
 
 
 def scan_files_to_unparsable(files_df, style: str = "content_length"):
     """(source_file, content) → unparsable_lines side-output DF."""
     from wbx.schema import UNPARSABLE_LINES
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["source_file", "start", "end", "bytes"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                result, _ = scan_archive(
-                    bytes(row["content"]), row["source_file"], style
-                )
-                rows.extend(result.unparsable)
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: pd.Series(dtype=object) for c in cols}
-            )
-
-    return files_df.mapInPandas(scan_batches, schema=UNPARSABLE_LINES)
+    return files_df.mapInArrow(
+        _scan_kernel(_emit_unparsable, UNPARSABLE_LINES, style), UNPARSABLE_LINES
+    )
 
 
 def scan_files_to_diagnostics(files_df, style: str = "content_length"):
     """(source_file, content) → diagnostics (warning/error rows) DF."""
     from wbx.schema import DIAGNOSTICS
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["source_file", "kind", "message"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for _, row in pdf.iterrows():
-                result, _ = scan_archive(
-                    bytes(row["content"]), row["source_file"], style
-                )
-                for w in result.warnings:
-                    rows.append(
-                        {"source_file": row["source_file"], "kind": "warning", "message": w}
-                    )
-                if result.error:
-                    rows.append(
-                        {
-                            "source_file": row["source_file"],
-                            "kind": "error",
-                            "message": result.error,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: pd.Series(dtype=object) for c in cols}
-            )
-
-    return files_df.mapInPandas(scan_batches, schema=DIAGNOSTICS)
+    return files_df.mapInArrow(
+        _scan_kernel(_emit_diagnostics, DIAGNOSTICS, style), DIAGNOSTICS
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1495,61 +1401,30 @@ def index_gzip_splits(files_df, target_bytes: int = 128 << 20, opener=None):
     rows of offsets) and is typically broadcast-sized even at 100 TB
     (a 1 GB archive at 128 MB targets is 8 rows)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from wbx.schema import ARCHIVE_SPLITS
 
     col = "source_file" if "source_file" in files_df.columns else "path"
     n_part = files_df.sparkSession.sparkContext.defaultParallelism
-    out_cols = [f.name for f in ARCHIVE_SPLITS.fields]
+    arrow_schema = to_arrow_schema(ARCHIVE_SPLITS)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def kernel(batches):
+        for batch in batches:
             rows: list[dict] = []
-            for p in pdf["source_file"]:
+            for p in batch.column("source_file").to_pylist():
                 with (opener or default_opener)(p) as f:
                     groups = plan_member_groups(
                         iter_gzip_members_stream(f), target_bytes
                     )
-                for g in groups:
-                    rows.append({"source_file": p, **g})
-            yield _records_frame(rows, out_cols)
+                rows.extend({"source_file": p, **g} for g in groups)
+            yield _record_batch(rows, arrow_schema)
 
     return (
         files_df.select(F.col(col).alias("source_file"))
         .repartition(n_part, "source_file")
-        .mapInPandas(kernel, schema=ARCHIVE_SPLITS)
+        .mapInArrow(kernel, ARCHIVE_SPLITS)
     )
-
-
-def _scan_splits_df(splits_df, schema, emit_rows, out_cols, style, wanted, gz_style, opener=None):
-    """Shared stage-2 runner: ranged-read each group's slice, scan it with
-    absolute offsets, emit rows via `emit_rows(result, non_warc, source)`."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list = []
-            for _, row in pdf.iterrows():
-                data = _read_slice(
-                    row["source_file"],
-                    int(row["comp_start"]),
-                    int(row["comp_end"]),
-                    opener,
-                )
-                result, non_warc = scan_member_group(
-                    data,
-                    row["source_file"],
-                    int(row["comp_start"]),
-                    int(row["unc_start"]),
-                    style,
-                    wanted,
-                    gz_style,
-                    int(row["n_members_total"]),
-                    int(row["group_id"]) == int(row["n_groups"]) - 1,
-                )
-                rows.extend(emit_rows(result, non_warc, row["source_file"]))
-            yield _records_frame(rows, out_cols)
-
-    return splits_df.mapInPandas(kernel, schema=schema)
 
 
 def scan_splits_to_records(
@@ -1565,111 +1440,11 @@ def scan_splits_to_records(
     truncation, and non-aligned archives). One task per ~target_bytes of
     compressed archive — the scan of a 10 GB .warc.gz is ~80 parallel
     tasks instead of one."""
-    out_cols, schema, wanted = _records_projection(columns)
-
-    def emit(result, non_warc, source):
-        return result.records + [_non_warc_row(m) for m in non_warc]
-
-    return _scan_splits_df(
-        splits_df, schema, emit, out_cols, style, wanted, gz_style, opener
+    schema, wanted = _records_projection(columns)
+    return splits_df.mapInArrow(
+        _scan_kernel(_emit_records, schema, style, wanted, gz_style, True, opener),
+        schema,
     )
-
-
-def split_text_iterator(
-    style: str = "content_length",
-    gz_style: str = "file",
-    on_error: str = "raise",
-    opener=None,
-):
-    """The fused split-scan batch-iterator kernel, shared by the batch
-    (scan_splits_to_text) and streaming (wbx.streaming.stream_split_text)
-    forms — one code path, one parity surface (mirrors text_scan_iterator
-    for whole files)."""
-    _text = _make_text_fn(on_error)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            records: list[dict] = []
-            for _, row in pdf.iterrows():
-                data = _read_slice(
-                    row["source_file"],
-                    int(row["comp_start"]),
-                    int(row["comp_end"]),
-                    opener,
-                )
-                result, _ = scan_member_group(
-                    data,
-                    row["source_file"],
-                    int(row["comp_start"]),
-                    int(row["unc_start"]),
-                    style,
-                    _TEXT_WANTED,
-                    gz_style,
-                    int(row["n_members_total"]),
-                    int(row["group_id"]) == int(row["n_groups"]) - 1,
-                )
-                records.extend(result.records)
-            yield _text_frame(records, _text)
-
-    return kernel
-
-
-def split_text_arrow_iterator(
-    style: str = "content_length",
-    gz_style: str = "file",
-    on_error: str = "raise",
-    opener=None,
-):
-    """Arrow-native twin of :func:`split_text_iterator` for the BATCH split
-    path (guide §4.1 — same move as text_scan_arrow_iterator): the input
-    side reads the nine slim split-metadata cells per task directly from
-    the RecordBatch instead of through pandas iterrows, and the output
-    side builds the TEXT_RECORDS batch in one C pass per column. The scan
-    kernel is the same scan_member_group call, so rows are byte-identical
-    (split-parity tests pin it); streaming keeps the pandas iterator."""
-    import pyarrow as pa
-
-    _text = _make_text_fn(on_error)
-    schema = _arrow_text_schema(pa)
-
-    def kernel(batches):
-        for batch in batches:
-            cols = batch.schema.names
-
-            def col(name):
-                return batch.column(cols.index(name))
-
-            src = col("source_file")
-            comp_start = col("comp_start")
-            comp_end = col("comp_end")
-            unc_start = col("unc_start")
-            group_id = col("group_id")
-            n_groups = col("n_groups")
-            n_members_total = col("n_members_total")
-            records: list[dict] = []
-            for i in range(batch.num_rows):
-                source = src[i].as_py()
-                data = _read_slice(
-                    source,
-                    comp_start[i].as_py(),
-                    comp_end[i].as_py(),
-                    opener,
-                )
-                result, _ = scan_member_group(
-                    data,
-                    source,
-                    comp_start[i].as_py(),
-                    unc_start[i].as_py(),
-                    style,
-                    _TEXT_WANTED,
-                    gz_style,
-                    n_members_total[i].as_py(),
-                    group_id[i].as_py() == n_groups[i].as_py() - 1,
-                )
-                records.extend(result.records)
-            yield _text_record_batch(records, _text, pa, schema)
-
-    return kernel
 
 
 def scan_splits_to_text(
@@ -1686,8 +1461,10 @@ def scan_splits_to_text(
     from wbx.schema import TEXT_RECORDS
 
     return splits_df.mapInArrow(
-        split_text_arrow_iterator(style, gz_style, on_error, opener),
-        schema=TEXT_RECORDS,
+        _scan_kernel(
+            _text_emit(on_error), TEXT_RECORDS, style, _TEXT_WANTED, gz_style, True, opener
+        ),
+        TEXT_RECORDS,
     )
 
 
@@ -1695,13 +1472,9 @@ def scan_splits_to_unparsable(splits_df, style: str = "content_length", opener=N
     """Stage 2 side-channel: unparsable lines, absolute offsets."""
     from wbx.schema import UNPARSABLE_LINES
 
-    cols = ["source_file", "start", "end", "bytes"]
-
-    def emit(result, non_warc, source):
-        return result.unparsable
-
-    return _scan_splits_df(
-        splits_df, UNPARSABLE_LINES, emit, cols, style, None, "file", opener
+    return splits_df.mapInArrow(
+        _scan_kernel(_emit_unparsable, UNPARSABLE_LINES, style, splits=True, opener=opener),
+        UNPARSABLE_LINES,
     )
 
 
@@ -1709,19 +1482,7 @@ def scan_splits_to_diagnostics(splits_df, style: str = "content_length", opener=
     """Stage 2 side-channel: warning/error diagnostics rows."""
     from wbx.schema import DIAGNOSTICS
 
-    cols = ["source_file", "kind", "message"]
-
-    def emit(result, non_warc, source):
-        rows = [
-            {"source_file": source, "kind": "warning", "message": w}
-            for w in result.warnings
-        ]
-        if result.error:
-            rows.append(
-                {"source_file": source, "kind": "error", "message": result.error}
-            )
-        return rows
-
-    return _scan_splits_df(
-        splits_df, DIAGNOSTICS, emit, cols, style, None, "file", opener
+    return splits_df.mapInArrow(
+        _scan_kernel(_emit_diagnostics, DIAGNOSTICS, style, splits=True, opener=opener),
+        DIAGNOSTICS,
     )
