@@ -855,7 +855,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Compacted-store membership path (wbx/frontier.py
         filter_unseen_split): the seen set arrives SPLIT as a compacted
         base + recent deltas — the shape CheckpointStore.load_seen_set
-        yields after compact_seen(bucketed=True) — and the anti-join
+        yields after compact_seen — and the anti-join
         chains base-then-recent without ever unioning the cumulative set.
         Bit-identical to filter_unseen on the union (the anti-join
         distributes over it), so the oracle is the plain set difference;
@@ -877,38 +877,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("doc_id", "canon_url")
 
     q["frontier_unseen_split"] = unseen_split
-
-    def unseen_cuckoo(spark, sf):
-        """The cuckoo half of the north_rule's "bloom/cuckoo URL-seen set"
-        (wbx/cuckoo.py): build the partitioned filter over the seen set,
-        RETRACT a subset through the sketch (the O(1) deletion a Bloom
-        cannot do), then run the cuckoo-prefiltered exact anti-join.
-        Result is exact by construction (the sketch only admits candidates
-        to the exact check), so the oracle is closed-form."""
-        from wbx.cuckoo import build_seen_cuckoo, remove_seen_cuckoo
-
-        docs = _t(spark, sf, "documents").select("doc_id")
-        url = F.concat(
-            F.lit("HTTP://H"), F.pmod("doc_id", F.lit(20)), F.lit(".COM:80/d/"), F.col("doc_id")
-        )
-        cand = with_canonical(docs.select("doc_id", url.alias("url")))
-        seen0 = cand.filter(F.pmod("doc_id", F.lit(3)) == 0).select(
-            "url_hash", "canon_url"
-        )
-        # retraction round: every 6th doc is marked for recrawl — removed
-        # from the exact seen table AND from the sketch
-        dels = cand.filter(F.pmod("doc_id", F.lit(6)) == 0).select(
-            "url_hash", "canon_url"
-        )
-        seen = seen0.join(dels, ["url_hash", "canon_url"], "left_anti")
-        ck = remove_seen_cuckoo(
-            build_seen_cuckoo(seen0, partitions=16), dels, partitions=16
-        )
-        return filter_unseen(cand, SeenSet(seen, sketch=ck, partitions=16)).select(
-            "doc_id", "canon_url"
-        )
-
-    q["frontier_unseen_cuckoo"] = unseen_cuckoo
 
     def round_q(spark, sf):
         hosts = spark.range(20).select(
@@ -3542,11 +3510,6 @@ def oracle_sql() -> dict[str, str]:
         "frontier_unseen_split": """
         SELECT doc_id, 'http://h' || (doc_id % 20) || '.com/d/' || doc_id AS canon_url
         FROM documents WHERE doc_id % 3 <> 0
-        """,
-        # seen = every 3rd doc minus the every-6th retractions
-        "frontier_unseen_cuckoo": """
-        SELECT doc_id, 'http://h' || (doc_id % 20) || '.com/d/' || doc_id AS canon_url
-        FROM documents WHERE doc_id % 3 <> 0 OR doc_id % 6 = 0
         """,
         "frontier_robots_rules": """
         WITH hosts AS (SELECT DISTINCT doc_id % 20 AS h FROM documents),

@@ -136,10 +136,10 @@ def materialize_frontier_inputs(spark) -> str:
         os.path.join(base, "seen")
     )
     # SPARK_GRAFT_SEEN_BASE=1: also land the seen set as the compacted
-    # bucketed base (CheckpointStore.compact_seen(bucketed=True) output
-    # shape) — the steady-state store layout of a long crawl. Like the
-    # Bloom build, compaction is background maintenance paid once per K
-    # rounds, so it sits outside the timed round. Default OFF for the
+    # bucketed base (CheckpointStore.compact_seen output shape) — the
+    # steady-state store layout of a long crawl. Like the Bloom build,
+    # compaction is background maintenance paid once per K rounds, so it
+    # sits outside the timed round. Default OFF for the
     # headline: at bench scale (3M seen keys, single node) the exchange it
     # removes is a page-cache memcpy while the bucketed join surrenders
     # AQE's runtime re-planning — measured fastest-ever at 4 cores but

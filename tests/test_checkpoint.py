@@ -159,49 +159,8 @@ class TestResume:
             assert int(sched) == n_batch
 
 
-class TestCompaction:
-    def test_compact_preserves_exact_seen_set(self, spark, tmp_path):
-        store = CheckpointStore(str(tmp_path / "c1"))
-        run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
-        before = sorted(
-            (r["url_hash"], r["canon_url"]) for r in store.load_seen(spark).collect()
-        )
-        marker = store.compact_seen(spark, buckets=8)
-        assert marker["compacted_through"] == 3
-        after = sorted(
-            (r["url_hash"], r["canon_url"]) for r in store.load_seen(spark).collect()
-        )
-        assert after == before and marker["rows"] == len(before)
-
-    def test_resume_after_compaction_identical(self, spark, tmp_path):
-        # uncompacted 5-round reference run
-        ref = CheckpointStore(str(tmp_path / "ref"))
-        run_crawl(spark, ref, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=5)
-        # compacted run: 3 rounds, compact, resume to 5
-        st = CheckpointStore(str(tmp_path / "cmp"))
-        run_crawl(spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
-        st.compact_seen(spark, buckets=8)
-        run_crawl(spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=5)
-        for store in (ref, st):
-            assert store.latest_round() == 5
-        a = sorted(map(tuple, ref.load_seen(spark).collect()))
-        b = sorted(map(tuple, st.load_seen(spark).collect()))
-        assert a == b
-        fa = sorted(map(tuple, ref.load(spark, "fetch_log", 5).collect()))
-        fb = sorted(map(tuple, st.load(spark, "fetch_log", 5).collect()))
-        assert fa == fb
-
-    def test_load_seen_before_compaction_point_uses_deltas(self, spark, tmp_path):
-        st = CheckpointStore(str(tmp_path / "c2"))
-        run_crawl(spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
-        want_r2 = sorted(map(tuple, st.load_seen(spark, 2).collect()))
-        st.compact_seen(spark)
-        # asking for an older round must NOT see the (newer) base
-        assert sorted(map(tuple, st.load_seen(spark, 2).collect())) == want_r2
-
-
 class TestBucketedSeenBase:
-    """compact_seen(bucketed=True) + load_seen_set: the shuffle-free
+    """compact_seen + load_seen_set: the shuffle-free
     membership path for the 10^10-URL seen set (frontier.filter_unseen_split).
     Correctness here; the no-exchange plan shape is pinned in test_plans.py."""
 
@@ -209,8 +168,9 @@ class TestBucketedSeenBase:
         store = CheckpointStore(str(tmp_path / "b1"))
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
         before = sorted(map(tuple, store.load_seen(spark).collect()))
-        marker = store.compact_seen(spark, buckets=8, bucketed=True)
+        marker = store.compact_seen(spark, buckets=8)
         assert marker["compacted_through"] == 3 and marker["buckets"] == 8
+        assert marker["rows"] == len(before)
         seen_set = store.load_seen_set(spark)
         assert seen_set.base is not None and seen_set.recent.count() == 0
         assert sorted(map(tuple, seen_set.base.collect())) == before
@@ -220,7 +180,7 @@ class TestBucketedSeenBase:
     def test_split_load_covers_post_compaction_deltas(self, spark, tmp_path):
         store = CheckpointStore(str(tmp_path / "b2"))
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=2)
-        store.compact_seen(spark, buckets=8, bucketed=True)
+        store.compact_seen(spark, buckets=8)
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=4)
         seen_set = store.load_seen_set(spark)
         got = sorted(map(tuple, seen_set.base.unionByName(seen_set.recent).collect()))
@@ -236,20 +196,35 @@ class TestBucketedSeenBase:
         assert sorted(map(tuple, seen_set.recent.collect())) == sorted(
             map(tuple, store.load_seen(spark).collect())
         )
-        # plain (non-bucketed) compaction must also use the fallback: its
-        # files carry no bucket metadata
-        store.compact_seen(spark, buckets=8)
-        assert store.load_seen_set(spark).base is None
+        # a plain-parquet compaction (the layout older stores wrote, marked
+        # buckets: 0) must also use the fallback: its files carry no bucket
+        # metadata, yet load_seen reads them back as the full set
+        full = sorted(map(tuple, store.load_seen(spark).collect()))
+        base_dir = os.path.join(store.base, "rounds", "r000002", "seen_base")
+        store.load_seen(spark).repartition(
+            8, F.pmod(F.col("url_hash"), F.lit(8))
+        ).write.parquet(base_dir)
+        with open(os.path.join(store.base, "COMPACTION.json"), "w") as f:
+            json.dump(
+                {"compacted_through": 2, "path": base_dir, "rows": len(full), "buckets": 0},
+                f,
+            )
+        assert store.attach_seen_base(spark) is None
+        seen_set = store.load_seen_set(spark)
+        assert seen_set.base is None
+        assert sorted(map(tuple, seen_set.recent.collect())) == full
+        assert sorted(map(tuple, store.load_seen(spark).collect())) == full
 
     def test_split_load_history_read_predating_compaction(self, spark, tmp_path):
         store = CheckpointStore(str(tmp_path / "b4"))
         run_crawl(spark, store, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
         want_r2 = sorted(map(tuple, store.load_seen(spark, 2).collect()))
-        store.compact_seen(spark, buckets=8, bucketed=True)
+        store.compact_seen(spark, buckets=8)
         # the round-2 view must NOT see the round-3 base (it holds future keys)
         seen_set = store.load_seen_set(spark, 2)
         assert seen_set.base is None
         assert sorted(map(tuple, seen_set.recent.collect())) == want_r2
+        assert sorted(map(tuple, store.load_seen(spark, 2).collect())) == want_r2
 
     def test_run_crawl_with_compact_every_is_bit_identical(self, spark, tmp_path):
         ref = CheckpointStore(str(tmp_path / "ref"))
@@ -273,7 +248,7 @@ class TestBucketedSeenBase:
         run_crawl(spark, ref, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=5)
         st = CheckpointStore(str(tmp_path / "cmp2"))
         run_crawl(spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=3)
-        st.compact_seen(spark, buckets=8, bucketed=True)
+        st.compact_seen(spark, buckets=8)
         # killed here; resume continues on the split membership path
         run_crawl(
             spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark),

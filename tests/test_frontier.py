@@ -128,14 +128,16 @@ class TestSeenSet:
         exact = sorted(r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect())
         assert via_bloom == exact
 
-    def test_copartitioned_mode_bit_identical(self, spark):
-        """The scale-path filter distribution (cogrouped per hash range,
-        no driver collect) must tag exactly like the broadcast mode (the
-        exact-result contract of both legs is pinned by the auto-mode test)."""
+    def test_copartitioned_mode_bit_identical(self, spark, monkeypatch):
+        """The scale-path filter distribution (shuffle join per hash range,
+        no driver collect; forced by a zero broadcast threshold) must tag
+        exactly like the broadcast leg (the exact-result contract of both
+        legs is pinned by the auto-mode test)."""
         cand, seen = self.make_sets(spark)
         bloom = frontier.build_seen_bloom(seen, partitions=8)
-        t_b = frontier.bloom_might_contain(cand, bloom, 8, mode="broadcast")
-        t_c = frontier.bloom_might_contain(cand, bloom, 8, mode="copartition")
+        t_b = frontier.bloom_might_contain(cand, bloom, 8)
+        monkeypatch.setattr(frontier, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+        t_c = frontier.bloom_might_contain(cand, bloom, 8)
         b = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_b.collect())
         c = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_c.collect())
         assert b == c
@@ -217,11 +219,11 @@ class TestSeenSet:
                 r["canon_url"]
                 for r in frontier.filter_unseen(cand, sketched).collect()
             )
+            t_c = frontier.bloom_might_contain(cand, bloom, 8)
         finally:
             fr._BLOOM_BROADCAST_MAX_BYTES = saved
         assert via_co == exact
-        t_b = frontier.bloom_might_contain(cand, bloom, 8, mode="broadcast")
-        t_c = frontier.bloom_might_contain(cand, bloom, 8, mode="copartition")
+        t_b = frontier.bloom_might_contain(cand, bloom, 8)
         b = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_b.collect())
         c = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_c.collect())
         assert b == c
@@ -467,16 +469,15 @@ class TestGlobalRank:
 
     def test_rank_parallelism_invariant_with_forced_buckets(self, spark):
         """Identical ranks at 1 and 16 input partitions, exercising a real
-        multi-boundary bucket split (sample_per_part=1 forces boundaries
-        even on a small input) including duplicate priorities across
-        buckets."""
+        multi-boundary bucket split (percentile boundaries on the numeric
+        first key) including duplicate priorities across buckets."""
         rows = [(f"http://h/{i:03d}", float(i % 4)) for i in range(300)]
         df = frontier.with_canonical(
             spark.createDataFrame(rows, "url string, priority double")
         )
         keys = [("priority", False), ("canon_url", True)]
-        a = frontier.global_rank(df.repartition(1), keys, sample_per_part=1)
-        b = frontier.global_rank(df.repartition(16), keys, sample_per_part=1)
+        a = frontier.global_rank(df.repartition(1), keys)
+        b = frontier.global_rank(df.repartition(16), keys)
         got_a = {r["canon_url"]: r["fetch_order"] for r in a.collect()}
         got_b = {r["canon_url"]: r["fetch_order"] for r in b.collect()}
         frontier.release_rank_caches()
@@ -495,19 +496,15 @@ class TestGlobalRank:
         )
         cold = {
             r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(df, keys, sample_per_part=1).collect()
+            for r in frontier.global_rank(df, keys).collect()
         }
         cache: dict = {}
-        first = frontier.global_rank(
-            df, keys, sample_per_part=1, boundary_cache=cache
-        )
+        first = frontier.global_rank(df, keys, boundary_cache=cache)
         first.count()
         assert cache, "miss path must populate the cache"
         warm = {
             r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(
-                df, keys, sample_per_part=1, boundary_cache=cache
-            ).collect()
+            for r in frontier.global_rank(df, keys, boundary_cache=cache).collect()
         }
         assert warm == cold
         # stale: boundaries from a disjoint high-priority input
@@ -518,17 +515,56 @@ class TestGlobalRank:
             )
         )
         stale_cache: dict = {}
-        frontier.global_rank(
-            other, keys, sample_per_part=1, boundary_cache=stale_cache
-        ).count()
+        frontier.global_rank(other, keys, boundary_cache=stale_cache).count()
         stale = {
             r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(
-                df, keys, sample_per_part=1, boundary_cache=stale_cache
-            ).collect()
+            for r in frontier.global_rank(df, keys, boundary_cache=stale_cache).collect()
         }
         frontier.release_rank_caches()
         assert stale == cold
+
+    @pytest.mark.parametrize("first_asc", [True, False])
+    def test_string_first_key_sampled_tuple_boundaries(self, spark, first_asc):
+        """A non-numeric first key takes the sampled-tuple boundary path
+        (the CLI's pack_shards on a string doc_id). Ranks and exclusive
+        prefix sums at 1 and 16 input partitions must equal a driver-side
+        sort and cumsum, with ties on the first key, NULLs last in both
+        directions, and real boundaries between the buckets."""
+        rows = [
+            (None if i % 50 == 7 else f"d{i % 97:03d}", i, i % 7 + 1)
+            for i in range(400)
+        ]
+        df = spark.createDataFrame(rows, "doc string, w int, len int")
+        keys = [("doc", first_asc), ("w", False)]
+
+        # stable sorts: w DESC within doc, then doc (NULLs last)
+        by_w = sorted(rows, key=lambda r: -r[1])
+        expected = sorted(
+            (r for r in by_w if r[0] is not None),
+            key=lambda r: r[0],
+            reverse=not first_asc,
+        ) + [r for r in by_w if r[0] is None]
+        exp_rank, exp_sum, acc = {}, {}, 0
+        for pos, r in enumerate(expected, start=1):
+            exp_rank[r[1]] = pos
+            exp_sum[r[1]] = acc
+            acc += r[2]
+        for parts in (1, 16):
+            cache: dict = {}
+            ranked = frontier.global_rank(
+                df.repartition(parts), keys, sample_per_part=1,
+                boundary_cache=cache,
+            )
+            got_rank = {r["w"]: r["fetch_order"] for r in ranked.collect()}
+            summed = frontier.global_prefix_sum(
+                df.repartition(parts), keys, "len", sample_per_part=1
+            )
+            got_sum = {r["w"]: r["prefix_sum"] for r in summed.collect()}
+            frontier.release_rank_caches()
+            kind, bvals = next(v for v in cache.values() if isinstance(v, tuple))
+            assert kind == "tup" and len(bvals) >= 1, (parts, bvals)
+            assert got_rank == exp_rank, parts
+            assert got_sum == exp_sum, parts
 
 
 ROBOTS_TXT = """\
@@ -639,6 +675,31 @@ class TestParseFeed:
             "https://a.com/e/1",
             "https://a.com/e/2",
             "https://a.com/e/3",
+        ]
+
+    def test_atom_entry_skips_non_alternate_links(self, spark):
+        # RFC 4287 §4.2.7.2: the entry's page is the link whose rel is
+        # absent or "alternate", not the edit/self/enclosure links before it
+        xml = (
+            '<feed xmlns="http://www.w3.org/2005/Atom">'
+            '<entry><link rel="edit" href="https://a.com/e/1/edit"/>'
+            "<link rel = 'self' href='https://a.com/e/1.atom'/>"
+            '<link rel="enclosure" type="audio/mpeg" href="https://a.com/e/1.mp3"/>'
+            '<link rel="alternate" href="https://a.com/e/1"/></entry>'
+            '<entry><link rel="edit" href="https://a.com/e/2/edit"/>'
+            '<link type="text/html" href="https://a.com/e/2"/></entry>'
+            "<entry><link REL = 'Alternate' href='https://a.com/e/3'/></entry>"
+            '<entry><link rel="edit" href="https://a.com/e/4/edit"/></entry>'
+            '<entry><link rel="self" href="https://a.com/e/5.atom"/><link rel='
+            '"http://www.iana.org/assignments/relation/alternate" href="https://a.com/e/5"/>'
+            "</entry></feed>"
+        )
+        got = sorted(r["item_url"] for r in frontier.parse_feed(self._feed(spark, xml)).collect())
+        assert got == [
+            "https://a.com/e/1",
+            "https://a.com/e/2",
+            "https://a.com/e/3",
+            "https://a.com/e/5",
         ]
 
     def test_malformed_bytes_safe(self, spark):
@@ -1189,22 +1250,6 @@ class TestFilterUnseenSplit:
             r["canon_url"]
             for r in frontier.filter_unseen(
                 cand, frontier.SeenSet(recent, base, bloom, 8)
-            ).collect()
-        )
-        want = sorted(
-            r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
-        )
-        assert got == want
-
-    def test_cuckoo_confirm_routes_through_split(self, spark):
-        from wbx import cuckoo as ck
-
-        cand, seen, base, recent = self.make_split(spark)
-        sk = ck.build_seen_cuckoo(seen, partitions=8, nbuckets=1 << 12)
-        got = sorted(
-            r["canon_url"]
-            for r in frontier.filter_unseen(
-                cand, frontier.SeenSet(recent, base, sk, 8)
             ).collect()
         )
         want = sorted(

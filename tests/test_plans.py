@@ -501,8 +501,8 @@ class TestSessionizePlan:
 
 class TestBucketedSeenBaseNoExchange:
     """The 10^10-URL membership plan: a seen base compacted as a bucketed
-    table on BOTH join keys (CheckpointStore.compact_seen(bucketed=True))
-    must anti-join with NO exchange on the base side — zero bytes of the
+    table on BOTH join keys (CheckpointStore.compact_seen) must anti-join
+    with NO exchange on the base side — zero bytes of the
     cumulative seen set cross the wire — and the candidate side must reuse
     its dedup groupBy exchange (same keys, same partition count), so the
     whole dedup+membership pipeline is exactly ONE exchange of O(batch)
@@ -522,7 +522,7 @@ class TestBucketedSeenBaseNoExchange:
         store = CheckpointStore(str(tmp_path / "cp"))
         store.commit(1, {"seen_delta": seen})
         buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        marker = store.compact_seen(spark, buckets=buckets, bucketed=True)
+        marker = store.compact_seen(spark, buckets=buckets)
         assert marker["buckets"] == buckets
         seen_set = store.load_seen_set(spark)
 

@@ -29,7 +29,6 @@ Modules:
   sinks       file-extraction sink (S9) + inspect projection + WET export
   graph       link-graph layer: PageRank authority, connected-component dedup
   sampling    deterministic hash sampling / stratified mixing / holdout splits
-  cuckoo      deletable seen-set sketch (cuckoo filter), usable as a SeenSet sketch
   replay      HTTP replay server over reassembled captures (S10)
   cli         `wbx` command line (summarize/filter/compare/extract/crawl/wet/cdx/audit/dedup-warc/chunk/pack/curate)
   fixtures    deterministic derived test fixtures (pages/records from documents)

@@ -76,20 +76,15 @@ def count_by_type(records: DataFrame) -> DataFrame:
     )
 
 
-def count_by_domain(records: DataFrame, parity_udf: bool = False) -> DataFrame:
+def count_by_domain(records: DataFrame) -> DataFrame:
     """A3: counts by urlparse-netloc of WARC-Target-URI.
 
-    Default tier is the JVM regexp (codegen'd — this is a hot path over
-    every record at 100 TB); pass parity_udf=True for the Python urlparse
-    fallback when byte-exact urlparse edge semantics matter."""
-    dom = (
-        netloc_udf(F.col("target_uri"))
-        if parity_udf
-        else netloc_expr(F.col("target_uri"))
-    )
+    The netloc is the JVM regexp netloc_expr (codegen'd — this is a hot
+    path over every record at 100 TB); netloc_udf, the Python urlparse
+    form, is its tested parity reference."""
     return (
         records.filter(F.col("target_uri").isNotNull())
-        .withColumn("domain", dom)
+        .withColumn("domain", netloc_expr(F.col("target_uri")))
         .filter(F.col("domain").isNotNull())
         .groupBy("domain")
         .agg(F.count("*").alias("n"))

@@ -136,10 +136,13 @@ class CheckpointStore:
         """The compacted seen base as a DataFrame whose scan reports its
         bucketing (HashPartitioning on url_hash) — the co-located-join fast
         path of filter_unseen_split. Returns None when no bucketed
-        compaction exists.
+        compaction exists: a COMPACTION.json with ``buckets: 0`` (the plain
+        parquet base older stores wrote) is read as ordinary files by
+        load_seen instead, since attaching unbucketed files as a bucketed
+        table would misplace keys.
 
         The default session catalog is in-memory, so after a restart the
-        table written by compact_seen(bucketed=True) is files-on-disk with
+        table written by compact_seen is files-on-disk with
         no catalog entry; this re-attaches it with the same bucket spec via
         external-table DDL (drop+create is idempotent and never touches the
         files — the table is external). This is exactly the Iceberg-manifest
@@ -158,9 +161,7 @@ class CheckpointStore:
         )
         return spark.table(tbl)
 
-    def compact_seen(
-        self, spark: SparkSession, buckets: int = 64, bucketed: bool = False
-    ) -> dict:
+    def compact_seen(self, spark: SparkSession, buckets: int = 64) -> dict:
         """Maintenance job (the Iceberg bin-packing analogue): merge every
         round's append-only ``seen_delta`` directory into ONE bucketed
         ``seen_base`` table under the latest round, so a long crawl's
@@ -168,16 +169,14 @@ class CheckpointStore:
 
         Correctness: deltas are disjoint by construction (crawl_round's
         anti-join), so the merged set is an exact union — no distinct
-        needed. With ``bucketed=False`` the base is written hash-partitioned
-        by pmod(url_hash, buckets) so future membership anti-joins can prune
-        buckets; with ``bucketed=True`` it is written as a true Spark
-        bucketed table on BOTH membership keys (bucketBy(url_hash,
-        canon_url) + sortBy — the Iceberg ``bucket(N, ...)`` partition
-        transform), whose scan carries HashPartitioning(url_hash, canon_url)
-        — exactly the anti-join's required distribution — so the per-round
-        membership check runs WITHOUT shuffling the cumulative set at all;
-        and since crawl_round's dedup groupBy uses the same keys, a bucket
-        count equal to spark.sql.shuffle.partitions makes the whole
+        needed. The base is a true Spark bucketed table on BOTH membership
+        keys (bucketBy(url_hash, canon_url) + sortBy — the Iceberg
+        ``bucket(N, ...)`` partition transform), whose scan carries
+        HashPartitioning(url_hash, canon_url) — exactly the anti-join's
+        required distribution — so the per-round membership check runs
+        WITHOUT shuffling the cumulative set at all; and since
+        crawl_round's dedup groupBy uses the same keys, a bucket count
+        equal to spark.sql.shuffle.partitions makes the whole
         dedup+membership pipeline a single exchange of O(batch) rows (see
         frontier.filter_unseen_split). load_seen reads base + any deltas
         newer than the compaction point. Crash-safe: the base lands in the
@@ -193,32 +192,24 @@ class CheckpointStore:
             return prior
         seen = self.load_seen(spark)
         base_dir = os.path.join(self.base, "rounds", f"r{rid:06d}", "seen_base")
-        if bucketed:
-            tbl = self._bucket_table_name()
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            (
-                # repartition by the bucket keys first so each write task
-                # holds exactly one bucket -> one file per bucket
-                seen.repartition(buckets, F.col("url_hash"), F.col("canon_url"))
-                .write.mode("overwrite")
-                .bucketBy(buckets, "url_hash", "canon_url")
-                .sortBy("url_hash", "canon_url")
-                .option("path", base_dir)
-                .saveAsTable(tbl)
-            )
-            n = spark.table(tbl).count()
-        else:
-            (
-                seen.repartition(buckets, F.pmod(F.col("url_hash"), F.lit(buckets)))
-                .write.mode("overwrite")
-                .parquet(base_dir)
-            )
-            n = spark.read.parquet(base_dir).count()
+        tbl = self._bucket_table_name()
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        (
+            # repartition by the bucket keys first so each write task
+            # holds exactly one bucket -> one file per bucket
+            seen.repartition(buckets, F.col("url_hash"), F.col("canon_url"))
+            .write.mode("overwrite")
+            .bucketBy(buckets, "url_hash", "canon_url")
+            .sortBy("url_hash", "canon_url")
+            .option("path", base_dir)
+            .saveAsTable(tbl)
+        )
+        n = spark.table(tbl).count()
         marker = {
             "compacted_through": rid,
             "path": base_dir,
             "rows": n,
-            "buckets": buckets if bucketed else 0,
+            "buckets": buckets,
         }
         tmp = os.path.join(self.base, "COMPACTION.json.tmp")
         with open(tmp, "w") as f:
@@ -236,7 +227,8 @@ class CheckpointStore:
         a bucketed compaction covers the round, else the full set as
         ``recent`` (including history reads at a round BEFORE the
         compaction point, where the base would contain keys from the
-        future). Sketch: the round's ``seen_bloom`` table; empty before
+        future, and a plain-parquet base marked ``buckets: 0`` by an older
+        store). Sketch: the round's ``seen_bloom`` table; empty before
         round 1; rebuilt from the full set for a store that lacks the table
         (one crawled before the loops kept it), at the loops' capacity so
         the next round's incremental update matches it."""
@@ -450,7 +442,7 @@ def crawl_step(
 
     ``compact_every``: after committing a round whose id is a multiple of
     K, fold the seen deltas into ONE bucketed base table
-    (compact_seen(bucketed=True)); later rounds then confirm membership
+    (compact_seen); later rounds then confirm membership
     against it without shuffling the cumulative set. Keyed on the round
     id, so a resumed crawl compacts at the same rounds as an uninterrupted
     one. A crash between the commit and the compaction leaves the round
@@ -485,9 +477,7 @@ def crawl_step(
         # candidate-side exchange (dedup groupBy, same keys) is
         # directly compatible with the base's bucketing
         store.compact_seen(
-            spark,
-            buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-            bucketed=True,
+            spark, buckets=int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
     batch.unpersist()
     release_rank_caches()

@@ -18,7 +18,11 @@ Scale design (10^10-URL frontier):
   payloads. A Bloom-filter pre-pass (``SeenSet.sketch``) drops the
   vast majority of already-seen URLs *before* the shuffle; the anti-join
   then restores exactness (Bloom false positives are re-checked, never
-  dropped: the sketch only ever *admits* candidates).
+  dropped: the sketch only ever *admits* candidates). Bloom is the one
+  sketch family: the crawl loops only ever add keys, so a deletable
+  sketch has no caller. A long crawl's compacted base is a bucketed
+  table (``SeenSet.base``) that joins without shuffling the cumulative
+  set.
 - per-host politeness is a window over host — host skew (one domain = 30%
   of rows) is the hot spot; an opt-in salted pre-cap (an explicit
   (host, salt) repartition + local top-budget, apply_politeness
@@ -519,8 +523,8 @@ def dedup_url_latest(pages: DataFrame, url_col: str = "url") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BLOOM_HASHES = 7
-# auto-mode threshold: total filter bytes the driver is willing to collect +
-# broadcast (a broadcast-hash join keeps the membership check map-side and
+# total filter bytes the driver is willing to collect + broadcast (a
+# broadcast-hash join keeps the membership check map-side and
 # shuffle-free); beyond this the filters are shuffled to their hash ranges
 _BLOOM_BROADCAST_MAX_BYTES = 64 << 20
 
@@ -650,7 +654,7 @@ def build_seen_bloom(
 
 
 def bloom_might_contain(
-    candidates: DataFrame, bloom: DataFrame, partitions: int = 64, mode: str = "broadcast"
+    candidates: DataFrame, bloom: DataFrame, partitions: int = 64
 ) -> DataFrame:
     """Adds `_maybe_seen boolean`: False => definitely unseen (Bloom filters
     never produce false negatives); True => must be confirmed exactly.
@@ -659,27 +663,20 @@ def bloom_might_contain(
     row and the k probes are unrolled bit-test Column expressions inside
     whole-stage codegen — no Python anywhere on the per-candidate path.
 
-    mode="broadcast": the P filter rows broadcast, the check is map-side
-    with NO shuffle at all. mode="copartition" (the 10^10 path, where the
-    filters are too big to broadcast): a plain shuffle join on the hash
-    partition — each filter row crosses the wire once per partition, never
-    the driver. mode="auto" (what filter_unseen uses): pick by the filters'
-    actual total size (one P-row aggregate). All modes are bit-identical
-    (tested)."""
-    if mode == "auto":
-        row = bloom.agg(F.sum("m").alias("bits")).collect()[0]
-        total_bytes = int(row["bits"] or 0) // 8
-        mode = (
-            "broadcast" if total_bytes <= _BLOOM_BROADCAST_MAX_BYTES else "copartition"
-        )
-    if mode not in ("broadcast", "copartition"):
-        raise ValueError("bloom mode must be broadcast | copartition | auto")
+    The join strategy follows the filters' actual total size (one P-row
+    aggregate): up to _BLOOM_BROADCAST_MAX_BYTES the P filter rows
+    broadcast and the check is map-side with NO shuffle at all; beyond it
+    (the 10^10 path) a plain shuffle join on the hash partition — each
+    filter row crosses the wire once per partition, never the driver. Both
+    legs are bit-identical (tested by lowering the threshold)."""
+    row = bloom.agg(F.sum("m").alias("bits")).collect()[0]
+    broadcast = int(row["bits"] or 0) // 8 <= _BLOOM_BROADCAST_MAX_BYTES
     blm = bloom.select(
         F.col("bloom_part").alias("_bp"),
         F.col("m").alias("_m"),
         F.col("words").alias("_words"),
     )
-    if mode == "broadcast":
+    if broadcast:
         blm = F.broadcast(blm)
     cand = candidates.withColumn(
         "_bp", F.pmod(F.col("url_hash"), F.lit(partitions)).cast("int")
@@ -711,12 +708,11 @@ class SeenSet:
 
     ``recent``: (url_hash, canon_url) keys; the whole set when ``base`` is
     None, else only the keys added since ``base`` was compacted.
-    ``base``: the compacted bucketed base
-    (CheckpointStore.compact_seen(bucketed=True)), or None.
-    ``sketch``: a per-hash-partition filter over every key of the set,
-    either Bloom (build_seen_bloom / update_seen_bloom, rows keyed by
-    ``bloom_part``) or cuckoo (wbx.cuckoo, keyed by ``cuckoo_part``), or
-    None. ``partitions``: the sketch's hash-partition count.
+    ``base``: the compacted bucketed base (CheckpointStore.compact_seen),
+    or None.
+    ``sketch``: per-hash-partition Bloom filters over every key of the set
+    (build_seen_bloom / update_seen_bloom), or None. ``partitions``: the
+    sketch's hash-partition count.
 
     CheckpointStore.load_seen_set builds one from a committed store."""
 
@@ -737,9 +733,9 @@ def filter_unseen(candidates: DataFrame, seen: DataFrame | SeenSet) -> DataFrame
     (:func:`filter_unseen_split`), so the cumulative set joins off its
     bucketed scan without an exchange.
 
-    With ``seen.sketch`` candidates are first tagged by the sketch (family
-    read from its schema; filters broadcast while they fit, copartitioned
-    beyond — :func:`bloom_might_contain` mode "auto"): the definitely-unseen
+    With ``seen.sketch`` candidates are first tagged by the Bloom sketch
+    (filters broadcast while they fit, copartitioned beyond —
+    :func:`bloom_might_contain`): the definitely-unseen
     majority skips the anti-join entirely and only the maybe-seen minority
     (true hits + false positives) is confirmed exactly. The sketch only ever
     ADMITS candidates to the exact check, so the result is bit-identical to
@@ -755,11 +751,7 @@ def filter_unseen(candidates: DataFrame, seen: DataFrame | SeenSet) -> DataFrame
         return filter_unseen_split(candidates, seen.base, seen.recent)
     from pyspark import StorageLevel
 
-    if "cuckoo_part" in seen.sketch.columns:
-        from wbx.cuckoo import cuckoo_might_contain as might_contain
-    else:
-        might_contain = bloom_might_contain
-    tagged = might_contain(candidates, seen.sketch, seen.partitions, "auto").persist(
+    tagged = bloom_might_contain(candidates, seen.sketch, seen.partitions).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     _register_rank_cache(tagged)
@@ -785,7 +777,7 @@ def filter_unseen_split(
     grows with crawl age — at 10^10 keys the seen side alone is ~1 TB of
     exchange per round, dwarfing the candidate batch. With the base stored
     as a Spark bucketed table hash-bucketed by BOTH membership keys
-    (CheckpointStore.compact_seen(bucketed=True) — the Iceberg
+    (CheckpointStore.compact_seen — the Iceberg
     ``bucket(N, ...)`` partition-transform analogue), its scan reports
     HashPartitioning(url_hash, canon_url) — exactly the anti-join's
     required ClusteredDistribution — so the base side joins WITH NO
@@ -1241,17 +1233,6 @@ def apply_politeness(
     )
 
 
-def salted_partition_key(host: Column, salt_buckets: int = 16) -> Column:
-    """Partitioning key that breaks hot-host skew: hash(host) plus a salt
-    derived from the URL hash, so one hot domain spreads over `salt_buckets`
-    reducers. Used for repartitioning ONLY — never in an orderBy."""
-    return F.concat(
-        F.conv(F.pmod(F.xxhash64(host), 1 << 16).cast("string"), 10, 16),
-        F.lit("#"),
-        F.pmod(F.col("url_hash"), salt_buckets).cast("string"),
-    )
-
-
 # DataFrames persisted by global_rank, released by release_rank_caches().
 # One entry per distinct cached plan; run_crawl releases per round, bench
 # per query.
@@ -1596,14 +1577,13 @@ def _bucket_staged(
 def schedule_fetch_batch(
     frontier: DataFrame,
     batch_size: int | None = None,
-    salt_buckets: int = 16,
     boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Deterministic global fetch order: rank by (priority DESC, canon_url).
 
-    Bucketed two-phase rank (see global_rank). The salted key exists for
-    upstream *shuffle* spreading of hot hosts; the final order is pure
-    (priority, canon_url) — salt never affects it.
+    Bucketed two-phase rank (see global_rank). Salting (apply_politeness
+    salt_buckets) only spreads hot hosts over upstream shuffles; the final
+    order is pure (priority, canon_url) — salt never affects it.
     """
     batch = global_rank(
         frontier,
@@ -1826,12 +1806,14 @@ def parse_feed(
     and Atom links from inside ``<entry>`` blocks — the channel/feed-level
     ``<link>`` (the site's own homepage) is deliberately NOT a candidate.
     Per block, the item URL is the first ``<link>text</link>`` (RSS) else
-    the first ``<link ... href=...>`` (Atom); entries with neither are
-    dropped. Same robustness contract as parse_sitemap: permissive
-    decode, trimmed whitespace, XML-escaped ampersands decoded in one
-    alternation pass. Two regexp_extract_all stages (blocks, then one
-    extract per block) — the explode carries (feed_url, block), never the
-    whole body; pure expressions, no shuffle, no Python."""
+    the first ``<link ... href=...>`` whose ``rel`` is absent or
+    ``alternate`` (Atom, RFC 4287 §4.2.7.2 — an entry's edit/self/
+    enclosure links are not its page); entries with neither are dropped.
+    Same robustness contract as parse_sitemap: permissive decode, trimmed
+    whitespace, XML-escaped ampersands decoded in one alternation pass.
+    Two regexp_extract_all stages (blocks, then one extract per block) —
+    the explode carries (feed_url, block), never the whole body; pure
+    expressions, no shuffle, no Python."""
     decoded = F.make_valid_utf8(F.col(body_col).cast("string"))
     blocks = F.concat(
         F.regexp_extract_all(decoded, F.lit(r"(?is)<item[\s>](.*?)</item>"), F.lit(1)),
@@ -1850,8 +1832,18 @@ def parse_feed(
     rss = nn(
         F.regexp_extract(b, r"(?is)<link[^>]*>\s*([^<\s][^<]*?)\s*</link>", 1)
     )
+    # Atom: the first <link> whose rel is absent or "alternate" (RFC 4287
+    # §4.2.7.2, also spelled as its IANA IRI) — edit/self/enclosure links
+    # are skipped by the lookahead (possessive quantifiers, so a quote or
+    # space cannot be given back to make 'alternate' look like another value)
     atom = nn(
-        F.regexp_extract(b, r"""(?is)<link[^>]*?href\s*=\s*["']?([^"'\s<>]+)""", 1)
+        F.regexp_extract(
+            b,
+            r"""(?is)<link(?![^>]*\srel\s*+=\s*+(?!["']?"""
+            r"""(?:http://www\.iana\.org/assignments/relation/)?alternate["'\s/>]))"""
+            r"""[^>]*?href\s*=\s*["']?([^"'\s<>]+)""",
+            1,
+        )
     )
     item = F.coalesce(rss, atom)
     return exploded.select(

@@ -225,7 +225,7 @@ def crawl_batch_processor(
     the replay re-runs cleanly).
 
     ``compact_every``: every K-th round, fold the seen deltas into a
-    bucketed base (compact_seen(bucketed=True)) and confirm membership
+    bucketed base (compact_seen) and confirm membership
     through the shuffle-free split path — same contract, same rounds and
     bit-identical results as batch run_crawl(compact_every=K). Compaction
     runs AFTER the round commits, so the replay guard is unaffected by a
