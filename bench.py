@@ -128,7 +128,7 @@ def materialize_frontier_inputs(spark) -> str:
     # candidate and the bench's designed skew never reached politeness
     # (discovered round 4: the top host had ~2.6k rows like everyone else).
     # Hash parity is orthogonal to hotness, so ~half the hot host survives
-    # the anti-join and the salted-politeness path is actually exercised.
+    # the anti-join and the hot-host politeness window is actually exercised.
     seen_keys = with_canonical(
         cand_src.filter(F.pmod(F.xxhash64(F.col("url")), F.lit(2)) == 0)
     ).select("url_hash", "canon_url")
@@ -161,7 +161,7 @@ def materialize_frontier_inputs(spark) -> str:
     return base
 
 
-def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[float, int, int]:
+def bench_frontier(spark, base: str) -> tuple[float, int, int]:
     """One timed crawl round — exactly the engine's work: canonicalize →
     dedup → seen anti-join → robots → politeness → deterministic global
     rank."""
@@ -205,8 +205,7 @@ def bench_frontier(spark, base: str, rank_cache: dict | None = None) -> tuple[fl
         seen = seen.limit(0)
     t0 = time.time()
     out = crawl_round(
-        cand, SeenSet(seen, seen_base, bloom), hosts, robots, default_budget=500,
-        rank_boundary_cache=rank_cache,
+        cand, SeenSet(seen, seen_base, bloom), hosts, robots, default_budget=500
     )
     n_sched = out.count()
     dt = time.time() - t0
@@ -298,12 +297,8 @@ def main() -> None:
     if "frontier" in jobs:
         fbase = materialize_frontier_inputs(spark)
         runs = []
-        # one rank-boundary dict across reps = run_crawl's warm-round regime
-        # (see global_rank: boundaries steer balance only, never the order);
-        # rep 1 pays the sampling jobs, warm reps run the round as ONE action
-        rank_cache: dict = {}
         for _ in range(reps):
-            runs.append(bench_frontier(spark, fbase, rank_cache))
+            runs.append(bench_frontier(spark, fbase))
             spark.catalog.clearCache()
         shutil.rmtree(fbase, ignore_errors=True)
         dt, n_in, n_sched = min(runs, key=lambda r: r[0])

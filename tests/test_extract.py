@@ -402,6 +402,30 @@ class TestHtmlToText:
         for r, (_, t, d, i) in zip(rows, cases):
             assert (r["og_title"], r["og_description"], r["og_image"]) == (t, d, i)
 
+    def test_og_meta_value_ends_at_its_own_quote(self, spark):
+        """A property-first content value ends at the quote that opened
+        it: an apostrophe inside double quotes (or a double quote inside
+        single quotes) is part of the value."""
+        from wbx.extract import og_meta
+        from pyspark.sql import functions as F
+
+        cases = [
+            ('<meta property="og:title" content="John\'s Page">', "John's Page"),
+            ("<meta property='og:title' content='Say \"hi\" now'>", 'Say "hi" now'),
+            ("<meta property=og:title content=Plain>", "Plain"),
+            (
+                '<meta property="og:title" content="Ann\'s">'
+                "<meta property='og:description' content='B'>",
+                "Ann's",
+            ),
+        ]
+        rows = (
+            spark.createDataFrame([(c[0],) for c in cases], "h string")
+            .select(og_meta(F.col("h"))["og_title"].alias("t"))
+            .collect()
+        )
+        assert [r["t"] for r in rows] == [c[1] for c in cases]
+
     def test_null_and_plain(self, spark):
         from wbx.extract import html_to_text
         from pyspark.sql import functions as F

@@ -228,29 +228,6 @@ class TestSeenSet:
         c = sorted((r["canon_url"], r["_maybe_seen"]) for r in t_c.collect())
         assert b == c
 
-    def test_salted_politeness_cap_bit_identical(self, spark):
-        # the two-phase skew-safe form must keep exactly the rows of the
-        # naive per-host window at every salt setting, including a hot host
-        urls = [
-            (f"http://hot.com/p{i}" if i % 2 == 0 else f"http://h{i % 7}.com/p{i}")
-            for i in range(400)
-        ]
-        cand = frontier.with_canonical(
-            urls_df(spark, urls)
-        ).withColumn("priority", F.pmod(F.xxhash64("canon_url"), F.lit(50)).cast("double"))
-        hosts = spark.createDataFrame([("hot.com", 9)], "host string, budget int")
-        base = None
-        for buckets in (0, 1, 4, 16):
-            got = sorted(
-                r["canon_url"]
-                for r in frontier.apply_politeness(
-                    cand, hosts, default_budget=5, salt_buckets=buckets
-                ).collect()
-            )
-            if base is None:
-                base = got
-            assert got == base, buckets
-
     def test_incremental_bloom_untouched_partitions_pass_through(self, spark):
         _, seen = self.make_sets(spark, n=200)
         b1 = frontier.update_seen_bloom(
@@ -484,52 +461,14 @@ class TestGlobalRank:
         assert got_a == got_b
         assert sorted(got_a.values()) == list(range(1, 301))
 
-    def test_rank_boundary_cache_warm_and_stale(self, spark):
-        """Boundary reuse never changes the rank: (1) a warm cache hit
-        yields the cold result, (2) boundaries sampled from a DIFFERENT
-        (disjoint, skewed) input — maximal staleness — still yield the
-        exact total order, because boundaries steer balance only."""
-        keys = [("priority", False), ("canon_url", True)]
-        rows = [(f"http://h/{i:03d}", float(i % 4)) for i in range(300)]
-        df = frontier.with_canonical(
-            spark.createDataFrame(rows, "url string, priority double")
-        )
-        cold = {
-            r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(df, keys).collect()
-        }
-        cache: dict = {}
-        first = frontier.global_rank(df, keys, boundary_cache=cache)
-        first.count()
-        assert cache, "miss path must populate the cache"
-        warm = {
-            r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(df, keys, boundary_cache=cache).collect()
-        }
-        assert warm == cold
-        # stale: boundaries from a disjoint high-priority input
-        other = frontier.with_canonical(
-            spark.createDataFrame(
-                [(f"http://zzz/{i}", 99.0) for i in range(50)],
-                "url string, priority double",
-            )
-        )
-        stale_cache: dict = {}
-        frontier.global_rank(other, keys, boundary_cache=stale_cache).count()
-        stale = {
-            r["canon_url"]: r["fetch_order"]
-            for r in frontier.global_rank(df, keys, boundary_cache=stale_cache).collect()
-        }
-        frontier.release_rank_caches()
-        assert stale == cold
-
     @pytest.mark.parametrize("first_asc", [True, False])
     def test_string_first_key_sampled_tuple_boundaries(self, spark, first_asc):
-        """A non-numeric first key takes the sampled-tuple boundary path
-        (the CLI's pack_shards on a string doc_id). Ranks and exclusive
-        prefix sums at 1 and 16 input partitions must equal a driver-side
-        sort and cumsum, with ties on the first key, NULLs last in both
-        directions, and real boundaries between the buckets."""
+        """A non-numeric first key (the CLI's pack_shards on a string
+        doc_id) takes the same in-plan sampled boundaries as a numeric one.
+        Ranks and exclusive prefix sums at 1 and 16 input partitions must
+        equal a driver-side sort and cumsum, with ties on the first key,
+        NULLs last in both directions, and real boundaries between the
+        buckets."""
         rows = [
             (None if i % 50 == 7 else f"d{i % 97:03d}", i, i % 7 + 1)
             for i in range(400)
@@ -550,21 +489,92 @@ class TestGlobalRank:
             exp_sum[r[1]] = acc
             acc += r[2]
         for parts in (1, 16):
-            cache: dict = {}
-            ranked = frontier.global_rank(
-                df.repartition(parts), keys, sample_per_part=1,
-                boundary_cache=cache,
-            )
+            staged, _, _ = frontier._bucket_staged(df.repartition(parts), keys)
+            buckets = {r["_rbucket"] for r in staged.select("_rbucket").distinct().collect()}
+            ranked = frontier.global_rank(df.repartition(parts), keys)
             got_rank = {r["w"]: r["fetch_order"] for r in ranked.collect()}
             summed = frontier.global_prefix_sum(
-                df.repartition(parts), keys, "len", sample_per_part=1
+                df.repartition(parts), keys, "len"
             )
             got_sum = {r["w"]: r["prefix_sum"] for r in summed.collect()}
             frontier.release_rank_caches()
-            kind, bvals = next(v for v in cache.values() if isinstance(v, tuple))
-            assert kind == "tup" and len(bvals) >= 1, (parts, bvals)
+            assert len(buckets) >= 2, (parts, buckets)
             assert got_rank == exp_rank, parts
             assert got_sum == exp_sum, parts
+
+    def test_build_runs_no_spark_job(self, spark, tmp_path):
+        """Building crawl_round over pre-read inputs, and global_prefix_sum
+        on a string key, runs no Spark job: the rank boundaries are part of
+        the plan. Checked with a cold rank cache and again with the cache a
+        previous round left behind."""
+        sc = spark.sparkContext
+        cand = spark.createDataFrame(
+            [(f"http://h{i % 7}.com/p{i}", float(i % 11)) for i in range(200)],
+            "url string, priority double",
+        )
+        cand.write.parquet(str(tmp_path / "cand"))
+        docs = spark.createDataFrame(
+            [(f"d{i:03d}", i % 5 + 1) for i in range(100)], "doc string, len int"
+        )
+        docs.write.parquet(str(tmp_path / "docs"))
+        cand = spark.read.parquet(str(tmp_path / "cand"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
+        seen = spark.createDataFrame([], "url_hash long, canon_url string")
+        hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
+
+        def build_jobs(group, build):
+            sc.setJobGroup(group, group)
+            try:
+                out = build()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        frontier.release_rank_caches()
+        try:
+            for state in ("cold", "warm"):
+                batch, jobs = build_jobs(
+                    f"wbx-build-round-{state}",
+                    lambda: frontier.crawl_round(cand, seen, hosts, batch_size=30),
+                )
+                assert jobs == 0, state
+                assert batch.count() == 30
+                summed, jobs = build_jobs(
+                    f"wbx-build-prefix-{state}",
+                    lambda: frontier.global_prefix_sum(docs, [("doc", True)], "len"),
+                )
+                assert jobs == 0, state
+                assert summed.count() == 100
+        finally:
+            frontier.release_rank_caches()
+
+    @pytest.mark.parametrize(
+        "keys",
+        [[("priority", False), ("canon_url", True)], [("canon_url", True)]],
+        ids=["numeric", "string"],
+    )
+    def test_bounds_computed_once_per_action(self, spark, keys):
+        """The counts branch and the bucket shuffle both read the boundary
+        subquery; the final adaptive plan must execute it once and reuse
+        it, not run the boundary aggregate per branch."""
+        import re
+
+        df = frontier.with_canonical(
+            spark.createDataFrame(
+                [(f"http://h/{i}", float(i % 13)) for i in range(300)],
+                "url string, priority double",
+            )
+        )
+        ranked = frontier.global_rank(df, keys)
+        try:
+            assert sorted(r["fetch_order"] for r in ranked.collect()) == list(
+                range(1, 301)
+            )
+            final = ranked._jdf.queryExecution().executedPlan().executedPlan().toString()
+        finally:
+            frontier.release_rank_caches()
+        assert "ReusedSubquery" in final
+        assert len(set(re.findall(r"Subquery subquery#\d+, \[id=#(\d+)\]", final))) == 1
 
 
 ROBOTS_TXT = """\

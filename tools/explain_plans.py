@@ -71,11 +71,7 @@ def main() -> None:
             ],
             schema="host string, rule_type string, path_prefix string",
         )
-        rank_cache: dict = {}
-        out = crawl_round(
-            cand, seen, hosts, robots, default_budget=500,
-            rank_boundary_cache=rank_cache,
-        )
+        out = crawl_round(cand, seen, hosts, robots, default_budget=500)
         plan = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )

@@ -3,7 +3,7 @@
 Usage: python tools/profile_round.py [cores] [amp]
 
 Builds the same inputs as bench.py's frontier job (amp x 100k candidates,
-~half pre-seen), then times, for cold and warm rank-boundary cache:
+~half pre-seen), then times four reps (caches released between reps):
   - build_s: py4j expression building + Dataset analysis (crawl_round call)
   - exec_s:  the terminal count() action
 Prints one JSON line per rep.
@@ -45,13 +45,9 @@ def main() -> None:
         schema="host string, rule_type string, path_prefix string",
     )
     n_in = cand.count()
-    rank_cache: dict = {}
     for rep in range(4):
         t0 = time.time()
-        out = crawl_round(
-            cand, seen, hosts, robots, default_budget=500,
-            rank_boundary_cache=rank_cache,
-        )
+        out = crawl_round(cand, seen, hosts, robots, default_budget=500)
         t1 = time.time()
         n = out.count()
         t2 = time.time()
@@ -62,7 +58,6 @@ def main() -> None:
             "build_s": round(t1 - t0, 3), "exec_s": round(t2 - t1, 3),
             "total_s": round(t2 - t0, 3),
             "urls_per_sec": round(n_in / (t2 - t0)),
-            "warm_cache": rep > 0,
         }), flush=True)
     import shutil
 

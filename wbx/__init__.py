@@ -10,7 +10,7 @@ Re-expresses the query/data-processing capabilities of harvard-lil/warcbench
   decoding) as vectorized pandas/Arrow UDFs — no per-row Python UDFs,
 - plus the crawl-frontier layer required by BASELINE.json: URL canonicalization,
   64-bit hashing, partitioned seen-set, robots evaluation, per-host politeness,
-  salted deterministic priority scheduling, and checkpoint/resume.
+  deterministic priority scheduling, and checkpoint/resume.
 
 Modules:
   session     SparkSession builder tuned for the target workload

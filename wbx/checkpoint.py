@@ -493,7 +493,6 @@ def run_crawl(
     rounds: int = 3,
     batch_size: int | None = None,
     default_budget: int = 10,
-    rank_refresh_every: int = 8,
     compact_every: int | None = None,
     reprioritize=None,
     robots_style: str = "prefix",
@@ -551,14 +550,7 @@ def run_crawl(
         return {"frontier": frontier}
 
     start = store.latest_round()
-    # rank-boundary reuse across rounds (see global_rank): boundaries only
-    # steer partition balance, so a later round may rank against an earlier
-    # round's sample; refreshed every `rank_refresh_every` rounds so the
-    # balance tracks the frontier's drifting key distribution
-    rank_cache: dict = {}
     for rid in range(start + 1, rounds + 1):
-        if rank_refresh_every and (rid - start - 1) % rank_refresh_every == 0:
-            rank_cache.clear()
         # each round reads the previous round's committed frontier, so its
         # lineage is rooted in files, not an ever-deepening in-memory plan
         frontier = seeds if rid == 1 else store.load(spark, "frontier", rid - 1)
@@ -572,7 +564,6 @@ def run_crawl(
             robots=robots,
             batch_size=batch_size,
             default_budget=default_budget,
-            rank_boundary_cache=rank_cache,
             robots_style=robots_style,
         )
     return {"final_round": max(start, rounds), "store": store.base}

@@ -31,8 +31,8 @@ shuffles only distinct hosts. The rule table (~10k rows for the real
 PSL) is broadcast.
 
 Politeness integration: :func:`apply_domain_politeness` runs the same
-two-phase salted budget window as frontier.apply_politeness but keyed by
-registered domain; `crawl_round(politeness_scope="registered_domain")`
+budget window as frontier.apply_politeness but keyed by registered
+domain; `crawl_round(politeness_scope="registered_domain")`
 opts the whole round in.
 """
 
@@ -331,11 +331,10 @@ def apply_domain_politeness(
     domains: DataFrame,
     default_budget: int = 10,
     broadcast: bool | None = None,
-    salt_buckets: int = 16,
     extra_two_label: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-REGISTERED-DOMAIN fetch budget: the same two-phase salted
-    politeness window as frontier.apply_politeness, keyed by eTLD+1 so
+    """Per-REGISTERED-DOMAIN fetch budget: the same politeness window as
+    frontier.apply_politeness, keyed by eTLD+1 so
     "a.example.co.uk" and "b.example.co.uk" share one budget while
     "a.co.uk" / "b.co.uk" (distinct registrants) do not.
 
@@ -364,7 +363,6 @@ def apply_domain_politeness(
         budgets,
         default_budget,
         broadcast,
-        salt_buckets,
         key_col="_rdom",
         budget_key="_rdom",
     ).drop("_rdom")

@@ -268,19 +268,6 @@ def http_header_block_udf(content_block: pd.Series, warc_header: pd.Series) -> p
     return pd.Series(out, dtype=object)
 
 
-@F.pandas_udf(T.BinaryType())
-def http_body_block_udf(content_block: pd.Series, warc_header: pd.Series) -> pd.Series:
-    """get_http_body_block parity (models.py:137-151)."""
-    out = []
-    for cb, hb in zip(content_block, warc_header):
-        if cb is None or hb is None or not warc_content_type_is_http(hb):
-            out.append(None)
-            continue
-        _, body = split_http_message(cb)
-        out.append(body)
-    return pd.Series(out, dtype=object)
-
-
 @F.pandas_udf(T.MapType(T.StringType(), T.ArrayType(T.StringType())))
 def parse_headers_udf(header_bytes: pd.Series) -> pd.Series:
     """WARC header bytes → decoded multi-valued field map (decode=True
@@ -595,16 +582,21 @@ def html_meta(html: "Column") -> dict[str, "Column"]:
 # OpenGraph <meta property="og:..." content="..."> — both attribute orders
 # occur in real HTML (the rel=canonical / meta-robots precedent); patterns
 # are RE2-safe so the oracle can chain them verbatim
-def _og_res(name: str) -> tuple[str, str]:
-    # prop_first terminates the property value with quote/whitespace ONLY
-    # (not '/>' ) — including '>' would let [^>]*? hop across the tag
+def _og_res(name: str) -> tuple[str, ...]:
+    # property-first terminates the property value with quote/whitespace
+    # ONLY (not '/>' ) — including '>' would let [^>]*? hop across the tag
     # boundary and steal the NEXT tag's content=. A property-last
     # unquoted tag ( ...property=og:title> ) falls through to the
-    # content-first form, which needs nothing after the property.
-    prop_first = (
+    # content-first form, which needs nothing after the property. The
+    # content value ends at '>' or at the quote that opened it (one
+    # pattern per quoting form), so "John's Page" keeps its apostrophe.
+    head = (
         r"""(?is)<meta[^>]*?property\s*=\s*["']?og:""" + name
-        + r"""["'\s][^>]*?content\s*=\s*["']?([^"'>]*)"""
+        + r"""["'\s][^>]*?content\s*=\s*"""
     )
+    pf_dq = head + r'"([^">]*)'
+    pf_sq = head + r"'([^'>]*)"
+    pf_uq = head + r"""([^"'>]*)"""
     # content-first needs one pattern per quoting form: a single pattern
     # with an optional closing quote truncates quoted values at their
     # first inner space (the lazy capture stops as soon as ["']?\s can
@@ -613,7 +605,7 @@ def _og_res(name: str) -> tuple[str, str]:
     cf_dq = r"""(?is)<meta[^>]*?content\s*=\s*"([^"]*)\"""" + tail
     cf_sq = r"""(?is)<meta[^>]*?content\s*=\s*'([^']*)'""" + tail
     cf_uq = r"""(?is)<meta[^>]*?content\s*=\s*([^"'\s>]+)\s""" + tail
-    return prop_first, cf_dq, cf_sq, cf_uq
+    return pf_dq, pf_sq, pf_uq, cf_dq, cf_sq, cf_uq
 
 
 def og_meta(html: "Column") -> dict[str, "Column"]:

@@ -214,10 +214,6 @@ def member_length_filter(target_length: int, use_operator: str = "eq") -> Column
     )
 
 
-def non_warc_member_filter() -> Column:
-    return ~F.col("is_warc")
-
-
 # --- F10/F11: escape hatches --------------------------------------------------
 
 

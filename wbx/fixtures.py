@@ -1,5 +1,5 @@
-"""Deterministic derived fixtures: WARC archives and pages tables built from
-the documents test table ON THE EXECUTORS (no external data, no randomness).
+"""Deterministic derived fixtures: WARC archives built from the documents
+test table ON THE EXECUTORS (no external data, no randomness).
 
 Used by __spark_entry__ (oracle-checked roundtrip queries), bench.py
 (throughput corpus), and tests. The byte format is pinned: gzip mtime=0,
@@ -12,7 +12,7 @@ from __future__ import annotations
 import gzip as _gzip
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -186,22 +186,3 @@ def wacz_bytes(archive: bytes, archive_name: str = "archive/data.warc.gz") -> by
             zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
             zf.writestr(zi, payload)
     return buf.getvalue()
-
-
-def pages_from_documents(
-    spark: SparkSession, docs: DataFrame, base_ts: str = "2024-01-01 00:00:00"
-) -> DataFrame:
-    """documents → the BASELINE.json input_hint pages table
-    (url, warc_ts, html, text, lang), fully deterministic."""
-    return docs.select(
-        F.concat(F.lit("https://docs.example/"), F.col("doc_id")).alias("url"),
-        (F.to_timestamp(F.lit(base_ts)) + F.make_interval(secs=F.col("doc_id"))).alias(
-            "warc_ts"
-        ),
-        F.encode(
-            F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
-            "utf-8",
-        ).alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )

@@ -9,8 +9,8 @@ Determinism contract (what makes results identical at local[8] vs local[32]
 and at N vs 4N executors): **no ordering ever depends on arrival or
 partition-iteration order.** Every ordering below is an explicit
 ``orderBy``/``row_number`` on fully-determined keys with a total tie-break
-(priority DESC, canon_url ASC). Salting participates only in *partitioning*
-(spreading hot hosts across reducers), never in the final order.
+(priority DESC, canon_url ASC). Rank buckets participate only in
+*partitioning*, never in the final order.
 
 Scale design (10^10-URL frontier):
 - the seen-set is hash-partitioned by ``url_hash``; membership is an
@@ -23,14 +23,8 @@ Scale design (10^10-URL frontier):
   sketch has no caller. A long crawl's compacted base is a bucketed
   table (``SeenSet.base``) that joins without shuffling the cumulative
   set.
-- per-host politeness is a window over host — host skew (one domain = 30%
-  of rows) is the hot spot; an opt-in salted pre-cap (an explicit
-  (host, salt) repartition + local top-budget, apply_politeness
-  salt_buckets) spreads a dominating host over many reducers before the
-  exact per-host window. It is opt-in because it costs a second full
-  exchange, which only pays once a single reducer's host volume is the
-  straggler (the r5 implicit form was planner-collapsed into a no-spread
-  extra sort — see apply_politeness).
+- per-host politeness is one exchange + window over host; host skew (one
+  domain = 30% of rows) puts a hot host's rows on one reducer.
 - robots evaluation is a broadcast join (rules tables are small) with
   longest-prefix-wins resolved by a window over matching rules.
 """
@@ -1164,23 +1158,13 @@ def apply_politeness(
     hosts: DataFrame,
     default_budget: int = 10,
     broadcast: bool | None = None,
-    salt_buckets: int = 16,
     key_col: str = "host",
     budget_key: str = "host",
 ) -> DataFrame:
     """Per-host fetch budget: keep the top-`budget` URLs per host by
     (priority DESC, canon_url ASC) — an explicit total order, so the kept
-    set is identical at any parallelism.
-
-    Skew shape (the module-docstring contract): a hot domain (one host =
-    30% of candidates) would put its entire row set through ONE reducer in
-    a naive per-host window. Phase 1 ranks within (host, salt) — the hot
-    host spreads over `salt_buckets` reducers — and keeps each bucket's
-    local top-budget; the global top-budget per host is a subset of the
-    union of per-bucket top-budgets, so phase 2's EXACT per-host window
-    runs over ≤ salt_buckets × budget rows per host, never the raw host
-    volume. Salting affects partitioning only — the kept set and order are
-    pure functions of (priority, canon_url) (bit-identity pinned by tests).
+    set is identical at any parallelism. One exchange on the key, one sort,
+    one window.
 
     hosts: (host, budget). ``broadcast`` as in apply_robots: at crawl scale
     this table is one row per HOST (10^7+), so the hint is opt-in; AQE
@@ -1189,18 +1173,7 @@ def apply_politeness(
     ``key_col``/``budget_key``: the frontier-side budget key and the
     matching column name in ``hosts`` — defaults group per host; pass a
     registered-domain column (wbx.domains.apply_domain_politeness) to
-    budget whole site operators. The plan is key-agnostic: same window
-    exchange(s), same salted two-phase shape.
-
-    r6 plan fix (guide §2.5): the salted phase now REPARTITIONS explicitly
-    on (key, salt). Before, the salt lived only in the window's
-    partitionBy — and EnsureRequirements satisfied BOTH windows with one
-    hashpartitioning(key) exchange (hash(key) clusters (key, salt) too),
-    so the hot host still landed on one reducer and phase 1 was a pure
-    extra sort+window of the full input with zero spreading. Salting is
-    therefore only worth its second full exchange when one key truly
-    dominates; pass ``salt_buckets=0`` for the single-exchange plan
-    (crawl_round's default — see its docstring)."""
+    budget whole site operators. The plan is key-agnostic."""
     budgets = hosts.select(F.col(budget_key).alias("_bhost"), "budget")
     if broadcast:
         budgets = F.broadcast(budgets)
@@ -1209,23 +1182,9 @@ def apply_politeness(
         F.col(key_col) == F.col("_bhost"),
         "left",
     ).withColumn("_budget", F.coalesce(F.col("budget"), F.lit(default_budget)))
-    order = [F.col("priority").desc(), F.col("canon_url").asc()]
-    if salt_buckets and salt_buckets > 1:
-        # salt from xxhash64(canon_url) (= url_hash) so no extra column is
-        # required of the caller; participates in PARTITIONING only. The
-        # explicit repartition is what actually spreads a hot key over
-        # salt_buckets reducers (see docstring); the window then runs on
-        # the exchange-provided (key, salt) clustering with no further
-        # shuffle.
-        salt = F.pmod(F.xxhash64(F.col("canon_url")), F.lit(salt_buckets))
-        f = f.withColumn("_psalt", salt).repartition(F.col(key_col), F.col("_psalt"))
-        w_salt = Window.partitionBy(key_col, "_psalt").orderBy(*order)
-        f = (
-            f.withColumn("_srank", F.row_number().over(w_salt))
-            .filter(F.col("_srank") <= F.col("_budget"))
-            .drop("_srank", "_psalt")
-        )
-    w = Window.partitionBy(key_col).orderBy(*order)
+    w = Window.partitionBy(key_col).orderBy(
+        F.col("priority").desc(), F.col("canon_url").asc()
+    )
     return (
         f.withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= F.col("_budget"))
@@ -1271,13 +1230,16 @@ def _register_rank_cache(df: DataFrame) -> None:
         _RANK_CACHES.pop(0).unpersist()
 
 
+# rank buckets: at most this many (and at most defaultParallelism), and this
+# many sampled first-key values per bucket for the boundaries
+_RANK_MAX_BUCKETS = 256
+_RANK_SAMPLE_PER_BUCKET = 100
+
+
 def global_rank(
     df: DataFrame,
     keys: list[tuple[str, bool]],
     rank_col: str = "fetch_order",
-    sample_per_part: int = 100,
-    max_buckets: int = 256,
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Scalable deterministic global rank over a total order.
 
@@ -1289,13 +1251,10 @@ def global_rank(
     through ONE reducer — a non-starter at 10^10 rows. Bucketed two-phase
     instead:
 
-      1. a small driver-side sample of the (persisted) input picks up to
-         n_part-1 BOUNDARY key tuples; each row's ``_rbucket`` = how many
-         boundaries it sorts strictly after — a monotone function of the
-         sort key computed as one compact higher-order-function expression
-         (size(filter(boundaries, b -> row_after(b))): O(boundaries) JVM
-         comparisons per row, no when-chain codegen blowup at high
-         parallelism);
+      1. each row's ``_rbucket`` = how many boundary values of the FIRST
+         sort key it sorts strictly after (see :func:`_bucket_staged`); the
+         boundaries are computed from the (persisted) input inside the
+         plan, so building the rank runs no Spark job;
       2. rows hash-shuffle ON the bucket and rank locally
          (row_number over Window.partitionBy(_rbucket)) — the bucket
          column satisfies the window's distribution, so this is the single
@@ -1303,51 +1262,22 @@ def global_rank(
       3. bucket counts come from a map-side-combinable aggregate over the
          SAME cached input — only ~n_mappers × n_buckets tiny rows cross
          that exchange, never the data — then a single-reducer window over
-         ≤ n_part count rows forms cumulative offsets, broadcast-joined
+         ≤ n_buckets count rows forms cumulative offsets, broadcast-joined
          back on the bucket id inside the caller's one action.
 
-    Why this shape (r4 rewrite of the repartitionByRange form): boundaries
-    affect only partition BALANCE — the rank is offset + local position,
-    both pure functions of the data — so making the bucket an explicit
-    COLUMN removes the old implementation's two fixed-cost seams: the
-    hidden range-boundary sampling job, and the second full
-    materialization (`indexed.persist`) that was needed only because two
-    independent range exchanges could sample different boundaries. One
-    persist remains — the input cache that lets the expensive upstream
-    pipeline (anti-join, robots, politeness) feed the sample, the counts
-    aggregate, and the bucket shuffle exactly once; registered for
-    :func:`release_rank_caches` (run_crawl releases after each round
-    commit).
+    Boundaries affect only partition BALANCE: the rank is offset + local
+    position, both pure functions of the data, so it equals the row's
+    position in the total order at any parallelism even though the
+    boundaries differ. Rows tied on the first key share a bucket; the
+    local sort over the full key orders them.
 
-    The resulting rank equals the row's position in the total order —
-    identical at any parallelism even though bucket boundaries differ.
-
-    ``max_buckets`` bounds BOTH the driver-side sample
-    (sample_per_part × buckets rows) and the per-row bucket computation
-    (O(buckets) JVM comparisons), independent of cluster size — on a
-    10^3-executor cluster defaultParallelism would otherwise drag both to
-    tens of thousands. 256 reducers is ample for this operator's input:
-    the rank runs on the POLITENESS-CAPPED fetch batch (≤ Σ per-host
-    budgets), never the raw frontier, so per-reducer volume stays small at
-    any corpus size. Raise it only alongside a cheaper per-row bucket
-    lookup (e.g. two-level chunked boundaries).
-
-    ``boundary_cache``: caller-owned dict reusing sampled boundaries across
-    rounds. Because boundaries affect only partition balance — the rank is
-    offset + local position, both pure functions of the data — a round may
-    rank against the PREVIOUS round's boundaries with zero correctness
-    impact, and an iterative crawl's key distribution drifts slowly, so
-    balance stays good too. A cache hit removes BOTH driver-side pre-jobs
-    (the materializing count and the sample collect): the whole rank
-    becomes one action whose broadcast subtree (the bucket-counts
-    aggregate) populates the persisted input for the bucket shuffle that
-    follows. The caller controls staleness by clearing the dict (run_crawl
-    refreshes every few rounds; the bench shares one dict across reps,
-    which is exactly the steady-state crawl regime the metric targets).
+    The input is persisted (registered for :func:`release_rank_caches`;
+    run_crawl releases after each round commit) so the expensive upstream
+    pipeline (anti-join, robots, politeness) feeds the sample, the counts
+    aggregate and the bucket shuffle once — and a repeat of the same plan
+    reads it from the cache.
     """
-    staged, n_part, worder = _bucket_staged(
-        df, keys, sample_per_part, max_buckets, boundary_cache
-    )
+    staged, n_part, worder = _bucket_staged(df, keys)
     counts = staged.groupBy("_rbucket").agg(F.count("*").alias("_n"))
     w_off = Window.orderBy("_rbucket").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
@@ -1371,23 +1301,17 @@ def global_prefix_sum(
     weight_col: str,
     out_col: str = "prefix_sum",
     exclusive: bool = True,
-    sample_per_part: int = 100,
-    max_buckets: int = 256,
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Scalable global (exclusive by default) prefix sum of ``weight_col``
     over the total order ``keys`` — global_rank's bucket scheme with SUM
     in place of COUNT: per-bucket weight totals form the broadcast
     offsets, a within-bucket running sum adds the local part. Same
     guarantees as :func:`global_rank` (result independent of bucket
-    boundaries/parallelism; one full-data exchange on ``_rbucket``; the
-    offsets window runs over ≤ max_buckets rows). Exclusive means the
-    row's own weight is NOT included — i.e. its START offset in the
-    concatenation order, the training-shard packing primitive
-    (:func:`wbx.textops.pack_shards`)."""
-    staged, n_part, worder = _bucket_staged(
-        df, keys, sample_per_part, max_buckets, boundary_cache
-    )
+    boundaries/parallelism; one full-data exchange on ``_rbucket``; no job
+    at build time). Exclusive means the row's own weight is NOT included —
+    i.e. its START offset in the concatenation order, the training-shard
+    packing primitive (:func:`wbx.textops.pack_shards`)."""
+    staged, n_part, worder = _bucket_staged(df, keys)
     sums = staged.groupBy("_rbucket").agg(
         F.sum(weight_col).cast("long").alias("_n")
     )
@@ -1417,179 +1341,89 @@ def global_prefix_sum(
 
 
 def _bucket_staged(
-    df: DataFrame,
-    keys: list[tuple[str, bool]],
-    sample_per_part: int,
-    max_buckets: int,
-    boundary_cache: dict | None,
+    df: DataFrame, keys: list[tuple[str, bool]]
 ) -> tuple[DataFrame, int, list]:
     """Shared stage-1 of the bucketed two-phase order operators
-    (global_rank / global_prefix_sum): persist the input, derive boundary
-    values, and attach the monotone ``_rbucket`` column. Returns
-    (staged df, bucket count, window order columns).
+    (global_rank / global_prefix_sum): persist the input and attach the
+    monotone ``_rbucket`` column. Returns (staged df, bucket count, window
+    order columns).
 
-    Boundary derivation (r6 — guide §1.2 "per-task work after shape"):
-    boundaries steer partition BALANCE only (the rank is offset + local
-    position, both pure functions of the data), so they need not be exact
-    or even sampled rows. When the FIRST sort key is numeric — every
-    in-repo caller: priority, unigram_nll, doc_id — the boundaries are
-    one ``approx_percentile`` aggregate over that key: ONE driver
-    pre-job (which doubles as the persist materialization) instead of the
-    old count() + sample().collect() pair, no row collection, and the
-    per-row bucket expression compares ≤255 double literals instead of
-    struct tuples with string tie-breaks. Ties on the first key share a
-    bucket (balance within a tie class is then up to the local sort,
-    which is exactly the situation the old tuple boundaries produced for
-    duplicated sample tuples). Non-numeric first keys keep the original
-    sampled-tuple scheme."""
+    Boundaries, inside the plan, from the FIRST sort key: for a numeric
+    key, its approximate quantiles at 1/n_part … (n_part-1)/n_part (one
+    aggregate, one exchange); for any other orderable type, up to
+    _RANK_SAMPLE_PER_BUCKET × n_part rows sampled by hash — group the rows
+    by xxhash64(keys) mod that target, keep each group's first key at the
+    group's largest hash — and the sorted sample's evenly spaced elements.
+    ``_rbucket`` = size(filter(bounds, b -> key sorts strictly after b));
+    NULL keys go past every boundary (last bucket, NULLS LAST in both
+    directions), and a NULL array (no non-NULL key) puts every row in
+    bucket 0.
+
+    The boundary array is a scalar subquery projected into a column (Spark
+    rejects a subquery written inside the lambda itself, not one it
+    inlines there). Both consumers of the staged frame (the counts
+    aggregate and the bucket shuffle) then share ONE execution of it —
+    the final adaptive plan reads it as a ReusedSubquery. A broadcast
+    cross join of the same one-row aggregate would run it twice per
+    action: each branch's scan of the persisted input is its own
+    TableCacheQueryStage, which AQE never reuses, so no exchange above it
+    is reused either."""
     from pyspark import StorageLevel
+    from pyspark.sql.types import NumericType
 
-    spark = df.sparkSession
-    n_part = min(spark.sparkContext.defaultParallelism, max_buckets)
+    n_part = min(df.sparkSession.sparkContext.defaultParallelism, _RANK_MAX_BUCKETS)
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _register_rank_cache(df)
-    key_names = [k for k, _ in keys]
     worder = [
         F.col(k).asc_nulls_last() if asc else F.col(k).desc_nulls_last()
         for k, asc in keys
     ]
     first_key, first_asc = keys[0]
-    first_type = df.schema[first_key].dataType.simpleString()
-    numeric_first = first_type in (
-        "double", "float", "int", "bigint", "smallint", "tinyint"
-    )
-
-    cache_key = (tuple(keys), n_part, sample_per_part)
-    if boundary_cache is not None and cache_key in boundary_cache:
-        bvals = boundary_cache[cache_key]
-    elif numeric_first:
-        # --- one-job percentile sketch over the first key ---------------
-        fracs = [i / n_part for i in range(1, n_part)]
-        row = df.agg(
-            F.percentile_approx(
-                F.col(first_key).cast("double"),
-                F.array(*[F.lit(x) for x in fracs]),
-                F.lit(10000),
-            ).alias("_p")
-        ).collect()[0]
-        qs = [q for q in (row["_p"] or []) if q is not None]
-        bvals = ("num", sorted(set(qs), reverse=not first_asc))
-        if boundary_cache is not None:
-            boundary_cache[cache_key] = bvals
+    key = F.col(first_key)
+    if isinstance(df.schema[first_key].dataType, NumericType):
+        # the sample below costs one more exchange stage per action
+        fracs = F.lit([i / n_part for i in range(1, n_part)])
+        bounds = df.agg(F.percentile_approx(key, fracs, F.lit(10000)))
     else:
-        # --- sampled-tuple boundaries (non-numeric first key) ------------
-        n = df.count()  # materializes the cache; sizes the sample fraction
-        target = sample_per_part * n_part
-        if n > target:
-            keyed = df.select(*key_names).sample(False, target / n, seed=42)
-        else:
-            keyed = df.select(*key_names)
-        rows = [tuple(r) for r in keyed.collect()]
-
-        def _cmp(a, b):
-            for i, (_, asc) in enumerate(keys):
-                x, y = a[i], b[i]
-                if x == y:
-                    continue
-                if x is None:
-                    return 1  # nulls last
-                if y is None:
-                    return -1
-                if x < y:
-                    return -1 if asc else 1
-                return 1 if asc else -1
-            return 0
-
-        import functools
-
-        rows.sort(key=functools.cmp_to_key(_cmp))
-        tvals = []
-        m = len(rows)
-        for i in range(1, n_part):
-            if not m:
-                break
-            t = rows[(m * i) // n_part]
-            if not tvals or t != tvals[-1]:
-                tvals.append(t)
-        bvals = ("tup", tvals)
-        if boundary_cache is not None:
-            boundary_cache[cache_key] = bvals
-
-    # --- monotone bucket column -------------------------------------------
-    # the literal boundary array is up to ~n_part elements = hundreds of
-    # py4j calls to rebuild (measured 0.4s/round warm) for a byte-identical
-    # expression, so the built Column memoizes alongside the boundaries,
-    # keyed by key datatypes + JVM identity (cross-context Columns are dead)
-    types = tuple(
-        f.dataType.simpleString() for f in df.select(*key_names).schema.fields
+        a = F.col("_a")
+        # the i-th boundary is the sample's element (size × i) div n_part;
+        # i = n_part points one past the end, which get() maps to NULL, as
+        # it does every index of an empty sample — array_compact drops those
+        bounds = (
+            df.select(key, F.xxhash64(*[k for k, _ in keys]).alias("_h"))
+            .groupBy(F.pmod("_h", F.lit(_RANK_SAMPLE_PER_BUCKET * n_part)))
+            .agg(F.max_by(key, "_h").alias("_s"))
+            .agg(F.array_sort(F.collect_list("_s")).alias("_a"))
+            .select(
+                F.array_compact(
+                    F.transform(
+                        F.sequence(F.lit(1), F.lit(n_part)),
+                        lambda i: F.get(a, (F.size(a) * i / n_part).cast("int")),
+                    )
+                )
+            )
+        )
+    after = (lambda b: key > b) if first_asc else (lambda b: key < b)
+    bucket = F.size(F.filter("_rbounds", lambda b: F.coalesce(after(b), key.isNull())))
+    staged = (
+        df.withColumn("_rbounds", bounds.scalar())
+        .withColumn("_rbucket", F.coalesce(bucket, F.lit(0)))
+        .drop("_rbounds")
     )
-    col_key = (cache_key, types, "bucket_col", _jvm_token())
-    bucket = boundary_cache.get(col_key) if boundary_cache is not None else None
-    if bucket is None:
-        kind, vals = bvals
-        if not vals:
-            bucket = F.lit(0)
-        elif kind == "num":
-            barr = F.array(*[F.lit(float(v)) for v in vals])
-            c = F.col(first_key).cast("double")
-            after = (lambda b: c > b) if first_asc else (lambda b: c < b)
-            # nulls sort last in both directions → past every boundary
-            bucket = F.when(c.isNull(), F.lit(len(vals))).otherwise(
-                F.size(F.filter(barr, after))
-            )
-        else:
-            fields = df.select(*key_names).schema.fields
-            barr = F.array(
-                *[
-                    F.struct(
-                        *[
-                            F.lit(v).cast(f.dataType).alias(f.name)
-                            for v, f in zip(t, fields)
-                        ]
-                    )
-                    for t in vals
-                ]
-            )
-
-            def row_after(b):
-                # row sorts strictly after boundary b (nulls last, both dirs)
-                cond = F.lit(False)
-                eqs = F.lit(True)
-                for kname, asc in keys:
-                    c = F.col(kname)
-                    bv = b[kname]
-                    basic = (c > bv) if asc else (c < bv)
-                    gt = (c.isNull() & bv.isNotNull()) | F.coalesce(
-                        basic, F.lit(False)
-                    )
-                    cond = cond | (eqs & gt)
-                    eqs = eqs & c.eqNullSafe(bv)
-                return cond
-
-            bucket = F.size(F.filter(barr, row_after))
-        if boundary_cache is not None:
-            boundary_cache[col_key] = bucket
-
-    staged = df.withColumn("_rbucket", bucket)
     return staged, n_part, worder
 
 
 def schedule_fetch_batch(
     frontier: DataFrame,
     batch_size: int | None = None,
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Deterministic global fetch order: rank by (priority DESC, canon_url).
 
-    Bucketed two-phase rank (see global_rank). Salting (apply_politeness
-    salt_buckets) only spreads hot hosts over upstream shuffles; the final
-    order is pure (priority, canon_url) — salt never affects it.
+    Bucketed two-phase rank (see global_rank); the order is pure
+    (priority, canon_url) at any parallelism.
     """
     batch = global_rank(
-        frontier,
-        [("priority", False), ("canon_url", True)],
-        "fetch_order",
-        boundary_cache=boundary_cache,
+        frontier, [("priority", False), ("canon_url", True)], "fetch_order"
     )
     if batch_size is not None:
         batch = batch.filter(F.col("fetch_order") <= batch_size)
@@ -1609,16 +1443,20 @@ def crawl_round(
     batch_size: int | None = None,
     default_budget: int = 10,
     broadcast_small: bool | None = None,
-    rank_boundary_cache: dict | None = None,
     robots_style: str = "prefix",
     politeness_scope: str = "host",
-    politeness_salt: int = 0,
 ) -> DataFrame:
     """candidates(url, priority) → ordered fetch batch.
 
     canonicalize → seen membership + dedup (max priority per canon_url,
     deterministic) → robots → politeness → deterministic priority order.
     Returns (canon_url, url_hash, host, priority, fetch_order).
+
+    Building the round runs no Spark job: the rank's boundaries are
+    computed inside the plan (see global_rank), so the whole round is the
+    caller's one action. The rank input stays persisted until
+    :func:`release_rank_caches`, and a repeat of the same round reads it
+    from the cache.
 
     ``seen``: the seen set, a :class:`SeenSet` or a bare (url_hash,
     canon_url) DataFrame (= ``SeenSet(seen)``). Its kind fixes the order of
@@ -1648,24 +1486,10 @@ def crawl_round(
     '*'/'$' patterns via apply_robots_wildcard; same join plan).
     ``broadcast_small`` is the robots/hosts join hint (see apply_robots).
 
-    ``rank_boundary_cache``: pass one dict across rounds to reuse the
-    scheduler's rank boundaries (see global_rank) — warm rounds then run
-    as a single Spark action with no driver-side pre-jobs.
-
     ``politeness_scope``: 'host' (default — budgets per raw host) or
     'registered_domain' (budgets per eTLD+1 via
     wbx.domains.apply_domain_politeness, so subdomain farms share one
-    budget; ``hosts`` is then (domain, budget)).
-
-    ``politeness_salt``: salt_buckets for apply_politeness. Default 0 —
-    one exchange + one sort + one window for the budget cap. Pass >1 only
-    when one host truly dominates the batch (≫1/parallelism of all rows):
-    the salted phase now costs a real second full exchange (see
-    apply_politeness: the previous implicit form was collapsed by the
-    planner into a no-spread extra sort, so this default changes the
-    physical plan from [sort+window+sort+window] to [sort+window] on the
-    same single exchange — strictly less work at any scale until a single
-    reducer's host volume is the straggler)."""
+    budget; ``hosts`` is then (domain, budget))."""
     if isinstance(seen, DataFrame):
         seen = SeenSet(seen)
     canon = with_canon_url(candidates.select("url", "priority")).select(
@@ -1683,8 +1507,7 @@ def crawl_round(
         )
         unseen = filter_unseen(deduped, seen)
     # url_hash is a pure function of canon_url and nothing between the
-    # membership stage and the output projection reads it (politeness
-    # derives its salt from xxhash64(canon_url) directly), so it is
+    # membership stage and the output projection reads it, so it is
     # dropped here and re-derived in the final select instead of riding
     # the politeness and rank exchanges — 8 bytes/row off both (guide
     # §2.3 shuffle fewer bytes). Identical output: same deterministic
@@ -1701,19 +1524,13 @@ def crawl_round(
         from wbx.domains import apply_domain_politeness
 
         polite = apply_domain_politeness(
-            unseen, hosts, default_budget, broadcast_small,
-            salt_buckets=politeness_salt,
+            unseen, hosts, default_budget, broadcast_small
         )
     elif politeness_scope == "host":
-        polite = apply_politeness(
-            unseen, hosts, default_budget, broadcast_small,
-            salt_buckets=politeness_salt,
-        )
+        polite = apply_politeness(unseen, hosts, default_budget, broadcast_small)
     else:
         raise ValueError("politeness_scope must be host | registered_domain")
-    return schedule_fetch_batch(
-        polite, batch_size, boundary_cache=rank_boundary_cache
-    ).select(
+    return schedule_fetch_batch(polite, batch_size).select(
         "canon_url",
         url_hash(F.col("canon_url")).alias("url_hash"),
         "host",

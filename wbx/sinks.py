@@ -516,7 +516,6 @@ def write_packed_shards(
     budget_tokens: int = 1_000_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Write the corpus as fixed-token-budget training shards and return
     the shard manifest: documents are assigned to shards by
@@ -542,7 +541,6 @@ def write_packed_shards(
         budget_tokens=budget_tokens,
         id_col=id_col,
         text_col=text_col,
-        boundary_cache=boundary_cache,
     )
     full = documents.join(packed, id_col)
     (

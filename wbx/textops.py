@@ -546,17 +546,6 @@ _LANG_MARKERS = {
 }
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Marker-hit counts per language over the token array."""
-    toks = tokens(text)
-    return {
-        lang: F.size(
-            F.filter(toks, lambda t: t.isin(markers))
-        )
-        for lang, markers in _LANG_MARKERS.items()
-    }
-
-
 def lang_id(text: Column) -> Column:
     """Best-scoring language, 'und' when nothing matches. Deterministic
     tie-break: language code ascending. The token array is let-bound so the
@@ -599,10 +588,6 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 # GPT-2-style pretokenizer, simplified to the lookahead-free subset so the
 # SAME pattern runs in Java regex (Spark) and RE2 (DuckDB oracle):
 # contractions | space?letters | space?digits | space?punct-run | whitespace.
@@ -616,32 +601,6 @@ def bpe_token_count(text: Column) -> Column:
     Column expression (regexp_extract_all), whole-stage codegen."""
     pieces = F.regexp_extract_all(text, F.lit(f"({BPE_TOKEN_RE})"))
     return F.size(F.filter(pieces, lambda p: p.rlike(r"\S")))
-
-
-def quality_features(text: Column) -> dict[str, Column]:
-    """Deterministic quality signals (all JVM-side):
-    n_chars, n_tokens, mean_token_len, stopword_ratio, alnum_ratio."""
-    toks = tokens(text)
-    n_tokens = F.size(toks)
-    total_tok_chars = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    )
-    en = _LANG_MARKERS["en"]
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin(en)))
-    alnum_chars = F.length(F.regexp_replace(F.lower(text), "[^a-z0-9]", ""))
-    return {
-        "n_chars": F.length(text),
-        "n_tokens": n_tokens,
-        "mean_token_len": F.when(n_tokens > 0, total_tok_chars / n_tokens).otherwise(
-            F.lit(0.0)
-        ),
-        "stopword_ratio": F.when(n_tokens > 0, stop_hits / n_tokens).otherwise(
-            F.lit(0.0)
-        ),
-        "alnum_ratio": F.when(
-            F.length(text) > 0, alnum_chars / F.length(text)
-        ).otherwise(F.lit(0.0)),
-    }
 
 
 def quality_score(text: Column) -> Column:
@@ -1543,7 +1502,6 @@ def pack_shards(
     budget_tokens: int = 1_000_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """Deterministic training-shard packing: assign each document to the
     fixed-token-budget output shard containing its START offset in the
@@ -1566,8 +1524,7 @@ def pack_shards(
     — bucketed two-phase, never a single-reducer window over the corpus;
     the only full-data exchange carries (id, n_tokens) plus the bucket
     id, text never shuffles (dropped before the rank stage, no late
-    fetch needed since the output is metadata-only). ``boundary_cache``
-    as in global_rank for repeated packing runs.
+    fetch needed since the output is metadata-only).
     """
     from wbx.frontier import global_prefix_sum
 
@@ -1580,7 +1537,6 @@ def pack_shards(
         "n_tokens",
         "start_offset",
         exclusive=True,
-        boundary_cache=boundary_cache,
     )
     b = F.lit(int(budget_tokens)).cast("long")
     # `div` is exact 64-bit integer division — float division then cast
@@ -1915,7 +1871,6 @@ def score_buckets(
     n_buckets: int = 3,
     id_col: str = "doc_id",
     labels: tuple[str, ...] | None = ("head", "middle", "tail"),
-    boundary_cache: dict | None = None,
 ) -> DataFrame:
     """CCNet-style quality bucketing: rank documents by a score (ascending
     — for NLL, low = most-typical language) and split them into
@@ -1936,12 +1891,7 @@ def score_buckets(
     base = scored.filter(F.col(score_col).isNotNull()).select(
         id_col, score_col
     )
-    ranked = global_rank(
-        base,
-        [(score_col, True), (id_col, True)],
-        "_rk",
-        boundary_cache=boundary_cache,
-    )
+    ranked = global_rank(base, [(score_col, True), (id_col, True)], "_rk")
     total = base.agg(F.count("*").cast("long").alias("_N"))
     n = F.lit(int(n_buckets)).cast("long")
     rk1 = F.col("_rk") - 1  # 0-based rank

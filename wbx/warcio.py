@@ -522,10 +522,6 @@ def index_gzip_members(data: bytes, chunk_size: int = 1 << 20) -> list[tuple[int
     return members
 
 
-def decompress_member(data: bytes, comp_start: int, comp_end: int) -> bytes:
-    return zlib.decompress(data[comp_start:comp_end], wbits=31)
-
-
 def split_gzip_members(
     data: bytes, chunk_size: int = 1 << 20
 ) -> list[tuple[int, int, bytes]]:
