@@ -872,9 +872,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         base = seen.filter(F.pmod("url_hash", F.lit(2)) == 0)
         recent = seen.filter(F.pmod("url_hash", F.lit(2)) != 0)
-        return filter_unseen_split(
-            cand, base, recent, broadcast_recent=True
-        ).select("doc_id", "canon_url")
+        return filter_unseen_split(cand, base, recent).select("doc_id", "canon_url")
 
     q["frontier_unseen_split"] = unseen_split
 

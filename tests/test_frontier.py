@@ -506,7 +506,9 @@ class TestGlobalRank:
         """Building crawl_round over pre-read inputs, and global_prefix_sum
         on a string key, runs no Spark job: the rank boundaries are part of
         the plan. Checked with a cold rank cache and again with the cache a
-        previous round left behind."""
+        previous round left behind. A seen set with a Bloom sketch is the
+        exception: bloom_might_contain sizes the filters with one
+        aggregate, 2 jobs under AQE (its shuffle stage and its result)."""
         sc = spark.sparkContext
         cand = spark.createDataFrame(
             [(f"http://h{i % 7}.com/p{i}", float(i % 11)) for i in range(200)],
@@ -521,6 +523,13 @@ class TestGlobalRank:
         docs = spark.read.parquet(str(tmp_path / "docs"))
         seen = spark.createDataFrame([], "url_hash long, canon_url string")
         hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
+        keys = frontier.with_canonical(cand.filter("priority < 3"))
+        frontier.build_seen_bloom(
+            keys.select("url_hash", "canon_url"), partitions=8, m=1024
+        ).write.parquet(str(tmp_path / "bloom"))
+        sketched = frontier.SeenSet(
+            seen, sketch=spark.read.parquet(str(tmp_path / "bloom")), partitions=8
+        )
 
         def build_jobs(group, build):
             sc.setJobGroup(group, group)
@@ -545,6 +554,12 @@ class TestGlobalRank:
                 )
                 assert jobs == 0, state
                 assert summed.count() == 100
+                batch, jobs = build_jobs(
+                    f"wbx-build-sketch-{state}",
+                    lambda: frontier.crawl_round(cand, sketched, hosts, batch_size=30),
+                )
+                assert jobs == 2, state
+                assert batch.count() == 30
         finally:
             frontier.release_rank_caches()
 
@@ -1215,14 +1230,11 @@ class TestFilterUnseenSplit:
         want = sorted(
             r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
         )
-        for kwargs in ({}, {"broadcast_recent": True}):
-            got = sorted(
-                r["canon_url"]
-                for r in frontier.filter_unseen_split(
-                    cand, base, recent, **kwargs
-                ).collect()
-            )
-            assert got == want, kwargs
+        got = sorted(
+            r["canon_url"]
+            for r in frontier.filter_unseen_split(cand, base, recent).collect()
+        )
+        assert got == want
 
     def test_none_base_falls_back_to_plain_filter(self, spark):
         cand, seen, _, _ = self.make_split(spark)
@@ -1502,6 +1514,9 @@ class TestUrlTraps:
 
 
 class TestRobotsWildcard:
+    """RFC 9309 patterns in apply_robots: '*' spans, a trailing '$'
+    anchors, the most specific match wins and a tie allows."""
+
     def _frontier(self, spark, paths, host="h.com"):
         return spark.createDataFrame(
             [(f"http://{host}{p}", host, 1.0) for p in paths],
@@ -1515,9 +1530,7 @@ class TestRobotsWildcard:
         )
 
     def _kept(self, spark, paths, rules):
-        from wbx.frontier import apply_robots_wildcard
-
-        out = apply_robots_wildcard(
+        out = frontier.apply_robots(
             self._frontier(spark, paths), self._rules(spark, rules)
         )
         return {r["canon_url"].split("h.com")[1] for r in out.collect()}
@@ -1565,10 +1578,8 @@ class TestRobotsWildcard:
         assert kept == {"/aXb/c"}
 
     def test_no_rules_host_allowed(self, spark):
-        from wbx.frontier import apply_robots_wildcard
-
         f = self._frontier(spark, ["/x"], host="other.com")
-        out = apply_robots_wildcard(f, self._rules(spark, [("deny", "/")]))
+        out = frontier.apply_robots(f, self._rules(spark, [("deny", "/")]))
         assert out.count() == 1
 
     def test_crawl_round_wildcard_style(self, spark):
@@ -1581,10 +1592,29 @@ class TestRobotsWildcard:
         seen = spark.createDataFrame([], "url_hash long, canon_url string")
         hosts = spark.createDataFrame([("h.com", 5)], "host string, budget int")
         robots = self._rules(spark, [("deny", "/fish*")])
-        out = crawl_round(cand, seen, hosts, robots, robots_style="wildcard")
+        out = crawl_round(cand, seen, hosts, robots)
         assert [r["canon_url"] for r in out.collect()] == ["http://h.com/ok/1"]
-        with pytest.raises(ValueError):
-            crawl_round(cand, seen, hosts, robots, robots_style="nope")
+
+    def test_crawl_round_honours_parsed_wildcards(self, spark):
+        """Parsed '*' and '$' rules bind the default crawl round: only
+        /a.pdfx (not .pdf-anchored) and /ok are scheduled."""
+        from wbx.frontier import crawl_round, parse_robots_txt
+
+        files = spark.createDataFrame(
+            [("h.com", "User-agent: *\nDisallow: /*.pdf$\nDisallow: /tmp*/cache")],
+            "host string, body string",
+        )
+        paths = ["/a.pdf", "/d/b.pdf", "/a.pdfx", "/tmp1/cache/x", "/ok"]
+        cand = spark.createDataFrame(
+            [(f"http://h.com{p}", 1.0) for p in paths], "url string, priority double"
+        )
+        seen = spark.createDataFrame([], "url_hash long, canon_url string")
+        hosts = spark.createDataFrame([("h.com", 10)], "host string, budget int")
+        out = crawl_round(cand, seen, hosts, parse_robots_txt(files))
+        assert sorted(r["canon_url"] for r in out.collect()) == [
+            "http://h.com/a.pdfx",
+            "http://h.com/ok",
+        ]
 
 
 class TestAnchorLinks:

@@ -446,31 +446,24 @@ class TestRobotsPolitenessJoins:
         hosts = spark.createDataFrame([("h1.com", 2)], "host string, budget int")
         return cand, robots, hosts
 
-    def test_forced_hint_broadcasts(self, spark):
-        from wbx import frontier
-
-        cand, robots, hosts = self._fixture(spark)
-        plan = plan_str(frontier.apply_robots(cand, robots, broadcast=True), "simple")
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-        plan = plan_str(
-            frontier.apply_politeness(cand, hosts, broadcast=True), "simple"
-        )
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
     def test_unhinted_plan_correct_and_unforced(self, spark):
-        """broadcast=None must not FORCE a broadcast (at crawl scale these
-        tables are ~#hosts rows and a forced hint OOMs); AQE may still pick
-        one at runtime from actual sizes — what matters is that the logical
-        plan carries no hint and results match the forced plan."""
+        """The robots and budget joins must not FORCE a broadcast (at crawl
+        scale these tables are ~#hosts rows and a forced hint OOMs); AQE may
+        still pick one at runtime from actual sizes — what matters is that
+        the logical plan carries no hint and the results are right."""
         from wbx import frontier
 
         cand, robots, hosts = self._fixture(spark)
-        unhinted = frontier.apply_robots(cand, robots, broadcast=None)
-        assert "ResolvedHint" not in unhinted._jdf.queryExecution().analyzed().toString()
-        forced = frontier.apply_robots(cand, robots, broadcast=True)
-        assert sorted(r["canon_url"] for r in unhinted.collect()) == sorted(
-            r["canon_url"] for r in forced.collect()
+        allowed = frontier.apply_robots(cand, robots)
+        polite = frontier.apply_politeness(cand, hosts)
+        for df in (allowed, polite):
+            assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
+        urls = [r["canon_url"] for r in cand.collect()]
+        assert sorted(r["canon_url"] for r in allowed.collect()) == sorted(
+            u for u in urls if not u.startswith("http://h1.com/p1")
         )
+        per_host = dict(polite.groupBy("host").count().collect())
+        assert per_host == {f"h{i}.com": 2 if i == 1 else 8 for i in range(5)}
 
 
 class TestSessionizePlan:
@@ -499,14 +492,29 @@ class TestSessionizePlan:
         assert "user_id#" in ex[0] and "session_idx" not in ex[0], ex
 
 
+def _ancestors(plan: str, needle: str) -> list[str]:
+    """The lines above the first plan-tree node whose line contains
+    ``needle``, nearest first: each is the previous line at a smaller
+    indent than the one before it."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    i = next(k for k, ln in enumerate(lines) if needle in ln)
+    out = []
+    for k in range(i - 1, -1, -1):
+        if depth[k] < depth[i]:
+            out.append(lines[k])
+            i = k
+    return out
+
+
 class TestBucketedSeenBaseNoExchange:
     """The 10^10-URL membership plan: a seen base compacted as a bucketed
     table on BOTH join keys (CheckpointStore.compact_seen) must anti-join
     with NO exchange on the base side — zero bytes of the
     cumulative seen set cross the wire — and the candidate side must reuse
     its dedup groupBy exchange (same keys, same partition count), so the
-    whole dedup+membership pipeline is exactly ONE exchange of O(batch)
-    rows (frontier.filter_unseen_split)."""
+    only exchange of the O(batch) candidate rows is the dedup one
+    (frontier.filter_unseen_split)."""
 
     def test_base_side_joins_without_exchange(self, spark, tmp_path):
         from wbx import frontier
@@ -544,7 +552,7 @@ class TestBucketedSeenBaseNoExchange:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             out = frontier.filter_unseen_split(
-                deduped, seen_set.base, seen_set.recent, broadcast_recent=True
+                deduped, seen_set.base, seen_set.recent
             )
             out.count()
             plan = out._jdf.queryExecution().executedPlan().toString()
@@ -554,11 +562,15 @@ class TestBucketedSeenBaseNoExchange:
         # planner that had to shuffle it reports "Bucketed: false
         # (disabled by query planner)" instead
         assert "Bucketed: true" in plan
-        # exactly one real (hash) exchange in the whole pipeline — the
-        # candidate dedup shuffle, reused by the anti-join; recent rides a
-        # broadcast. A second hash exchange means either the base or the
-        # candidates were re-shuffled: the at-scale regression this pins.
-        assert plan.count("Exchange hashpartitioning") == 1
+        # with broadcasts off, two hash exchanges: the candidate dedup
+        # shuffle, which both anti-joins reuse, and the recent deltas'.
+        # Nothing above the base scan or the dedup aggregate is an
+        # exchange: a re-shuffle of the base or of the candidates is the
+        # at-scale regression this pins.
+        assert plan.count("Exchange hashpartitioning") == 2, plan
+        for node in ("Bucketed: true", "HashAggregate"):
+            above = _ancestors(plan, node)
+            assert not any("Exchange" in ln for ln in above), (node, plan)
 
 
 class TestRound4Plans:

@@ -495,7 +495,6 @@ def run_crawl(
     default_budget: int = 10,
     compact_every: int | None = None,
     reprioritize=None,
-    robots_style: str = "prefix",
 ) -> dict:
     """Batch-iterative crawl: each round schedules a fetch batch from the
     current frontier, marks it seen, expands it into next-round candidates,
@@ -508,7 +507,11 @@ def run_crawl(
     (all ordering is deterministic in the data; see wbx.frontier).
 
     ``expand(batch_df) -> DataFrame(url, priority)`` must be deterministic.
-    seeds: (url, priority).
+    seeds: (url, priority). hosts: (host, budget). robots: (host,
+    rule_type, path_prefix) rules, e.g. from wbx.frontier.parse_robots_txt;
+    every round evaluates them with apply_robots (RFC 9309 '*'/'$'
+    patterns, most specific match wins), and AQE picks the strategy of
+    the robots and budget joins from their runtime size.
 
     Seen set: each round schedules against CheckpointStore.load_seen_set —
     a :class:`wbx.frontier.SeenSet` of the committed deltas (or a bucketed
@@ -564,6 +567,5 @@ def run_crawl(
             robots=robots,
             batch_size=batch_size,
             default_budget=default_budget,
-            robots_style=robots_style,
         )
     return {"final_round": max(start, rounds), "store": store.base}

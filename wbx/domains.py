@@ -330,7 +330,6 @@ def apply_domain_politeness(
     frontier: DataFrame,
     domains: DataFrame,
     default_budget: int = 10,
-    broadcast: bool | None = None,
     extra_two_label: Sequence[str] = (),
 ) -> DataFrame:
     """Per-REGISTERED-DOMAIN fetch budget: the same politeness window as
@@ -359,10 +358,5 @@ def apply_domain_politeness(
     )
     budgets = domains.select(F.col("domain").alias("_rdom"), "budget")
     return apply_politeness(
-        staged,
-        budgets,
-        default_budget,
-        broadcast,
-        key_col="_rdom",
-        budget_key="_rdom",
+        staged, budgets, default_budget, key_col="_rdom", budget_key="_rdom"
     ).drop("_rdom")

@@ -25,8 +25,12 @@ Scale design (10^10-URL frontier):
   set.
 - per-host politeness is one exchange + window over host; host skew (one
   domain = 30% of rows) puts a hot host's rows on one reducer.
-- robots evaluation is a broadcast join (rules tables are small) with
-  longest-prefix-wins resolved by a window over matching rules.
+- robots evaluation (RFC 9309) is one equi-join on host against the rules
+  grouped per host; the most specific matching rule is picked by an array
+  expression over the host's rules, with no window.
+- no caller sets a join hint: every small-side join (robots, budgets, the
+  recent seen deltas) is left to AQE and ``autoBroadcastJoinThreshold``,
+  which broadcast from the measured runtime size.
 """
 
 from __future__ import annotations
@@ -657,11 +661,14 @@ def bloom_might_contain(
     row and the k probes are unrolled bit-test Column expressions inside
     whole-stage codegen — no Python anywhere on the per-candidate path.
 
-    The join strategy follows the filters' actual total size (one P-row
-    aggregate): up to _BLOOM_BROADCAST_MAX_BYTES the P filter rows
-    broadcast and the check is map-side with NO shuffle at all; beyond it
-    (the 10^10 path) a plain shuffle join on the hash partition — each
-    filter row crosses the wire once per partition, never the driver. Both
+    The join strategy follows the filters' actual total size: one
+    aggregate over the P filter rows, collected when this function is
+    called, so building the result runs Spark jobs (2 under AQE: the
+    aggregate's shuffle stage and its result). Up to
+    _BLOOM_BROADCAST_MAX_BYTES the P filter rows broadcast and the check
+    is map-side with NO shuffle at all; beyond it (the 10^10 path) a plain
+    shuffle join on the hash partition — each filter row crosses the wire
+    once per partition, never the driver. Both
     legs are bit-identical (tested by lowering the threshold)."""
     row = bloom.agg(F.sum("m").alias("bits")).collect()[0]
     broadcast = int(row["bits"] or 0) // 8 <= _BLOOM_BROADCAST_MAX_BYTES
@@ -729,16 +736,18 @@ def filter_unseen(candidates: DataFrame, seen: DataFrame | SeenSet) -> DataFrame
 
     With ``seen.sketch`` candidates are first tagged by the Bloom sketch
     (filters broadcast while they fit, copartitioned beyond —
-    :func:`bloom_might_contain`): the definitely-unseen
-    majority skips the anti-join entirely and only the maybe-seen minority
-    (true hits + false positives) is confirmed exactly. The sketch only ever
-    ADMITS candidates to the exact check, so the result is bit-identical to
-    the plain anti-join. The tagged set is persisted: the definite and
-    maybe branches both consume it, and without a shared materialization
-    each would recompute the entire upstream pipeline (column pruning
-    rewrites the branches differently, so ReuseExchange does not fire;
-    measured 2x the whole round). It is registered with the rank-cache
-    release lifecycle (release_rank_caches / FIFO-capped backstop)."""
+    :func:`bloom_might_contain`, whose size aggregate runs when this
+    function is called; without a sketch, building runs no job): the
+    definitely-unseen majority skips the anti-join entirely and only the
+    maybe-seen minority (true hits + false positives) is confirmed
+    exactly. The sketch only ever ADMITS candidates to the exact check, so
+    the result is bit-identical to the plain anti-join. The tagged set is
+    persisted: the definite and maybe branches both consume it, and
+    without a shared materialization each would recompute the entire
+    upstream pipeline (column pruning rewrites the branches differently,
+    so ReuseExchange does not fire; measured 2x the whole round). It is
+    registered with the rank-cache release lifecycle (release_rank_caches
+    / FIFO-capped backstop)."""
     if isinstance(seen, DataFrame):
         seen = SeenSet(seen)
     if seen.sketch is None:
@@ -755,10 +764,7 @@ def filter_unseen(candidates: DataFrame, seen: DataFrame | SeenSet) -> DataFrame
 
 
 def filter_unseen_split(
-    candidates: DataFrame,
-    seen_base: DataFrame | None,
-    seen_recent: DataFrame,
-    broadcast_recent: bool | None = None,
+    candidates: DataFrame, seen_base: DataFrame | None, seen_recent: DataFrame
 ) -> DataFrame:
     """Exact frontier ∖ seen against a COMPACTED seen-set: chained
     anti-joins, base then recent. Identical results to
@@ -781,24 +787,20 @@ def filter_unseen_split(
     existing dedup exchange (same keys), reused — one exchange for the
     whole dedup+membership pipeline (plan-pinned in tests/test_plans.py).
     The post-compaction deltas ("recent") are small by construction
-    (≤ compaction interval × batch size), so their anti-join broadcasts.
-    Per-round network cost becomes O(candidates), constant in crawl age.
-
-    ``broadcast_recent``: True forces the hint on the recent side of a
-    split set, None lets AQE decide from measured size (the
-    conditional-broadcast policy used across this module)."""
+    (≤ compaction interval × batch size), so AQE broadcasts their
+    anti-join once their measured size is under
+    ``autoBroadcastJoinThreshold``. Per-round network cost becomes
+    O(candidates), constant in crawl age."""
     keys = ["url_hash", "canon_url"]
     recent = seen_recent.select(*keys)
     if seen_base is None:
         return candidates.join(recent, keys, "left_anti")
     base_kept = candidates.join(seen_base.select(*keys), keys, "left_anti")
-    if broadcast_recent:
-        recent = F.broadcast(recent)
     return base_kept.join(recent, keys, "left_anti")
 
 
 # ---------------------------------------------------------------------------
-# robots.txt evaluation (broadcast join + longest-prefix-wins window)
+# robots.txt evaluation (RFC 9309: host equi-join + most-specific match)
 # ---------------------------------------------------------------------------
 
 
@@ -1038,32 +1040,40 @@ def schedule_with_delays(
     )
 
 
-def apply_robots(
-    frontier: DataFrame, robots: DataFrame, broadcast: bool | None = None
-) -> DataFrame:
-    """Keep frontier rows allowed by robots rules.
+def apply_robots(frontier: DataFrame, robots: DataFrame) -> DataFrame:
+    """Keep frontier rows allowed by robots rules (RFC 9309 §2.2.2-2.2.3).
 
-    rules: (host, rule_type ∈ {allow, deny}, path_prefix). Longest matching
-    prefix wins; tie → allow wins; no matching rule → allowed.
+    rules: (host, rule_type ∈ {allow, deny}, path_prefix). A pattern
+    matches from the start of the path; '*' matches any span and a
+    trailing '$' anchors the end. The most specific match (longest
+    pattern) wins; tie → allow wins; no matching rule → allowed.
 
     Plan shape (scale-critical): rules are pre-grouped per host and the
-    frontier side does ONE equi join on host — no window, no nested-loop.
-    Longest-prefix-wins is a pure array expression (filter + array_max over
-    (prefix_len, is_allow) structs), evaluated inside whole-stage codegen.
-
-    ``broadcast``: True forces a broadcast-hash join (correct only when the
-    grouped rules table is known-small); None (default) lets AQE /
-    autoBroadcastJoinThreshold decide from the aggregate's actual runtime
-    size — at crawl scale the rules table is ~#hosts rows (10^7-10^8) and an
-    unconditional broadcast hint would OOM the driver."""
+    frontier side does ONE equi join on host — no window, no nested-loop;
+    the join strategy is AQE's (the rules table is ~#hosts rows at crawl
+    scale). The most-specific match is a pure array expression (filter +
+    array_max over (pattern_len, is_allow) structs). A rule carries its
+    regex (:func:`robots_pattern_regex`) only when it has a wildcard or an
+    anchor; a literal rule matches by ``startswith``, so a rules table
+    without wildcards evaluates no regex at all, and a wildcard rule's
+    regex string is built once per rule row, never per candidate."""
+    pat = F.col("path_prefix")
+    wild = pat.contains("*") | pat.endswith("$")
     rules = robots.groupBy("host").agg(
-        F.collect_list(F.struct("path_prefix", "rule_type")).alias("_rules")
+        F.collect_list(
+            F.struct(
+                "path_prefix",
+                "rule_type",
+                F.when(wild, robots_pattern_regex(pat)).alias("_re"),
+            )
+        ).alias("_rules")
     )
-    if broadcast:
-        rules = F.broadcast(rules)
     f = with_url_path(frontier, out="_path").join(rules, "host", "left")
+    path = F.col("_path")
     matching = F.filter(
-        F.col("_rules"), lambda r: F.col("_path").startswith(r["path_prefix"])
+        F.col("_rules"),
+        lambda r: F.when(r["_re"].isNull(), path.startswith(r["path_prefix"]))
+        .otherwise(F.regexp_like(path, r["_re"])),
     )
     best = F.array_max(
         F.transform(
@@ -1084,7 +1094,7 @@ def apply_robots(
 
 
 def robots_pattern_regex(pattern: Column) -> Column:
-    """Google-robots pattern → anchored RE2 regex, as pure Column algebra
+    """RFC 9309 robots pattern → anchored regex, as pure Column algebra
     evaluated ONCE per rule row (never per candidate): '*' matches any
     span, a trailing '$' anchors the end, everything else is literal
     (specials escaped). '^' is prepended — robots patterns always match
@@ -1100,54 +1110,6 @@ def robots_pattern_regex(pattern: Column) -> Column:
     )
 
 
-def apply_robots_wildcard(
-    frontier: DataFrame, robots: DataFrame, broadcast: bool | None = None
-) -> DataFrame:
-    """Google-spec robots matching (REP draft / google webmasters rules):
-    patterns may contain '*' wildcards and a trailing '$' anchor; the
-    MOST SPECIFIC (longest pattern string) match wins, allow beats deny
-    on ties, no match → allowed.
-
-    Additive companion to :func:`apply_robots` (which keeps the
-    longest-PREFIX semantics the reference-parity suite pins): same
-    grouped-per-host rules aggregate, same single host equi-join, but the
-    per-rule match is a regex compiled once per rule row
-    (:func:`robots_pattern_regex`) and evaluated via regexp_like inside
-    the array filter. Plan shape is identical — no window, no
-    nested-loop, rules broadcast under the same policy."""
-    prepped = robots.select(
-        "host",
-        F.col("rule_type"),
-        F.col("path_prefix").alias("pattern"),
-        robots_pattern_regex(F.col("path_prefix")).alias("_re"),
-    )
-    rules = prepped.groupBy("host").agg(
-        F.collect_list(F.struct("pattern", "rule_type", "_re")).alias("_rules")
-    )
-    if broadcast:
-        rules = F.broadcast(rules)
-    f = with_url_path(frontier, out="_path").join(rules, "host", "left")
-    matching = F.filter(
-        F.col("_rules"), lambda r: F.regexp_like(F.col("_path"), r["_re"])
-    )
-    best = F.array_max(
-        F.transform(
-            matching,
-            lambda r: F.struct(
-                F.length(r["pattern"]).alias("l"),
-                F.when(r["rule_type"] == "allow", 1).otherwise(0).alias("pref"),
-                r["rule_type"].alias("rule_type"),
-            ),
-        )
-    )
-    allowed = (
-        F.col("_rules").isNull()
-        | (F.size(matching) == 0)
-        | (best["rule_type"] == "allow")
-    )
-    return f.filter(allowed).drop("_path", "_rules")
-
-
 # ---------------------------------------------------------------------------
 # politeness + deterministic priority scheduling
 # ---------------------------------------------------------------------------
@@ -1157,7 +1119,6 @@ def apply_politeness(
     frontier: DataFrame,
     hosts: DataFrame,
     default_budget: int = 10,
-    broadcast: bool | None = None,
     key_col: str = "host",
     budget_key: str = "host",
 ) -> DataFrame:
@@ -1166,17 +1127,15 @@ def apply_politeness(
     set is identical at any parallelism. One exchange on the key, one sort,
     one window.
 
-    hosts: (host, budget). ``broadcast`` as in apply_robots: at crawl scale
-    this table is one row per HOST (10^7+), so the hint is opt-in; AQE
-    broadcasts it at runtime whenever it is actually small.
+    hosts: (host, budget). At crawl scale this table is one row per HOST
+    (10^7+), so the join strategy is AQE's: it broadcasts the budgets at
+    runtime whenever they are actually small.
 
     ``key_col``/``budget_key``: the frontier-side budget key and the
     matching column name in ``hosts`` — defaults group per host; pass a
     registered-domain column (wbx.domains.apply_domain_politeness) to
     budget whole site operators. The plan is key-agnostic."""
     budgets = hosts.select(F.col(budget_key).alias("_bhost"), "budget")
-    if broadcast:
-        budgets = F.broadcast(budgets)
     f = frontier.join(
         budgets,
         F.col(key_col) == F.col("_bhost"),
@@ -1442,8 +1401,6 @@ def crawl_round(
     robots: DataFrame | None = None,
     batch_size: int | None = None,
     default_budget: int = 10,
-    broadcast_small: bool | None = None,
-    robots_style: str = "prefix",
     politeness_scope: str = "host",
 ) -> DataFrame:
     """candidates(url, priority) → ordered fetch batch.
@@ -1452,9 +1409,13 @@ def crawl_round(
     deterministic) → robots → politeness → deterministic priority order.
     Returns (canon_url, url_hash, host, priority, fetch_order).
 
-    Building the round runs no Spark job: the rank's boundaries are
-    computed inside the plan (see global_rank), so the whole round is the
-    caller's one action. The rank input stays persisted until
+    Building the round over a seen set without a sketch runs no Spark
+    job: the rank's boundaries are computed inside the plan (see
+    global_rank), so the whole round is the caller's one action. A
+    ``seen.sketch`` adds the one aggregate :func:`bloom_might_contain`
+    collects at build time to size its join (2 jobs under AQE); every
+    round of run_crawl and crawl_batch_processor has one. The rank input
+    stays persisted until
     :func:`release_rank_caches`, and a repeat of the same round reads it
     from the cache.
 
@@ -1481,10 +1442,9 @@ def crawl_round(
     functionally dependent on canon_url and is (re)derived as a map
     expression after the exchange instead of riding through it.
 
-    ``robots_style``: 'prefix' (default — the reference-parity
-    longest-prefix semantics the oracle pins) or 'wildcard' (Google-REP
-    '*'/'$' patterns via apply_robots_wildcard; same join plan).
-    ``broadcast_small`` is the robots/hosts join hint (see apply_robots).
+    ``robots``: (host, rule_type, path_prefix) rules, e.g. from
+    :func:`parse_robots_txt`, evaluated by :func:`apply_robots` (RFC 9309
+    '*'/'$' patterns, most specific match wins); None skips robots.
 
     ``politeness_scope``: 'host' (default — budgets per raw host) or
     'registered_domain' (budgets per eTLD+1 via
@@ -1514,20 +1474,13 @@ def crawl_round(
     # expression over the same canon_url values.
     unseen = with_url_host(unseen.drop("url_hash"))
     if robots is not None:
-        if robots_style == "wildcard":
-            unseen = apply_robots_wildcard(unseen, robots, broadcast_small)
-        elif robots_style == "prefix":
-            unseen = apply_robots(unseen, robots, broadcast_small)
-        else:
-            raise ValueError("robots_style must be prefix | wildcard")
+        unseen = apply_robots(unseen, robots)
     if politeness_scope == "registered_domain":
         from wbx.domains import apply_domain_politeness
 
-        polite = apply_domain_politeness(
-            unseen, hosts, default_budget, broadcast_small
-        )
+        polite = apply_domain_politeness(unseen, hosts, default_budget)
     elif politeness_scope == "host":
-        polite = apply_politeness(unseen, hosts, default_budget, broadcast_small)
+        polite = apply_politeness(unseen, hosts, default_budget)
     else:
         raise ValueError("politeness_scope must be host | registered_domain")
     return schedule_fetch_batch(polite, batch_size).select(

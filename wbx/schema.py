@@ -1,7 +1,7 @@
 """Canonical StructTypes for the engine (SURVEY.md §1.3, FIXTURES.md).
 
 Column layout notes for 100 TB scale:
-- heavy binary columns (content_block, header_bytes, html) live in their own
+- heavy binary columns (content_block, header_bytes) live in their own
   parquet columns so Catalyst column pruning means a query that never touches
   payload bytes never reads them;
 - hot predicate fields (warc_type, target_uri, content_length, content_type)
@@ -12,17 +12,6 @@ Column layout notes for 100 TB scale:
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# Input table per BASELINE.json input_hint (Iceberg in production).
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 # Spark analogue of the reference's models.Record (models.py:83-170) plus
 # gzip-member context (models.py:268-373).
@@ -107,16 +96,6 @@ ARCHIVE_SPLITS = T.StructType(
     ]
 )
 
-GZIP_MEMBERS = T.StructType(
-    [
-        T.StructField("source_file", T.StringType(), False),
-        T.StructField("member_start", T.LongType(), False),
-        T.StructField("member_end", T.LongType(), False),
-        T.StructField("unc_start", T.LongType(), False),
-        T.StructField("unc_end", T.LongType(), False),
-    ]
-)
-
 # Crawl-frontier tables (north_rule).
 FRONTIER = T.StructType(
     [
@@ -134,21 +113,6 @@ SEEN = T.StructType(
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("canon_url", T.StringType(), False),
         T.StructField("fetched_round", T.IntegerType(), False),
-    ]
-)
-
-HOSTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("budget", T.IntegerType(), False),
-    ]
-)
-
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("rule_type", T.StringType(), False),  # allow | deny
-        T.StructField("path_prefix", T.StringType(), False),
     ]
 )
 

@@ -203,7 +203,6 @@ def crawl_batch_processor(
     batch_size: int | None = None,
     default_budget: int = 10,
     compact_every: int | None = None,
-    robots_style: str = "prefix",
 ):
     """foreachBatch processor for :func:`stream_crawl` (factored out so the
     exactly-once replay contract is unit-testable without a running query).
@@ -211,8 +210,9 @@ def crawl_batch_processor(
     Each micro-batch of discovered candidate (url, priority) rows is
     scheduled as ONE crawl round by the batch loop's own step
     (wbx.checkpoint.crawl_step) — identical canonicalization, membership
-    against the store's SeenSet (Bloom-prefiltered), robots, politeness and
-    deterministic ordering — and committed atomically to the
+    against the store's SeenSet (Bloom-prefiltered), RFC 9309 robots
+    (wbx.frontier.apply_robots), politeness and deterministic ordering,
+    with every join strategy left to AQE — and committed atomically to the
     CheckpointStore as {seen_delta, fetch_log, metrics, seen_bloom,
     stream_marker}.
 
@@ -259,7 +259,6 @@ def crawl_batch_processor(
             robots=robots,
             batch_size=batch_size,
             default_budget=default_budget,
-            robots_style=robots_style,
         )
 
     return process
@@ -282,6 +281,8 @@ def stream_crawl(
     The frontier state machine is the same as batch run_crawl minus the
     ``expand`` step: in streaming mode link discovery IS the input stream,
     so rounds contain exactly the new candidates that arrived.
+    ``round_opts`` are crawl_batch_processor's keyword arguments
+    (batch_size, default_budget, compact_every).
 
     Authority scheduling (batch run_crawl's ``reprioritize=`` twin): apply
     the hook to the input stream itself —

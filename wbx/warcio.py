@@ -862,11 +862,6 @@ def scan_warc_gz(
 # ---------------------------------------------------------------------------
 
 
-def record_bytes(header_bytes: bytes, content_block: bytes) -> bytes:
-    """Reassemble one record's wire bytes (header incl. its final CRLF)."""
-    return header_bytes + CRLF + content_block
-
-
 def write_warc(records: list[bytes]) -> bytes:
     """Concatenate records with the CRLFCRLF terminator."""
     return b"".join(r + CRLF * 2 for r in records)
