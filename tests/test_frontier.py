@@ -1576,6 +1576,91 @@ class TestRobotsWildcard:
         )
         # '.' must be literal: /aXb must NOT be blocked
         assert kept == {"/aXb/c"}
+        # ... also in a wildcard or anchored rule
+        assert self._kept(spark, ["/a.b/c", "/aXb/c"], [("deny", "/a.b*")]) == {
+            "/aXb/c"
+        }
+        assert self._kept(spark, ["/a+b", "/aab"], [("deny", "/a+b$")]) == {"/aab"}
+        assert self._kept(
+            spark, ["/x(1)[2]/y", "/x11/y"], [("deny", "/x(*)[*]/*$")]
+        ) == {"/x11/y"}
+
+    def test_query_is_matched(self, spark):
+        """Rules match the path plus query: '/*?' blocks every query URL,
+        '/s?id=' names one, and '$' anchors after the query."""
+        kept = self._kept(
+            spark,
+            ["/a?x=1", "/s?id=3", "/b", "/c.pdf?v=2", "/c.pdf"],
+            [("deny", "/*?"), ("allow", "/*.pdf")],
+        )
+        assert kept == {"/b", "/c.pdf?v=2", "/c.pdf"}
+        kept = self._kept(
+            spark, ["/s?id=3", "/s", "/c.pdf?v=2"], [("deny", "/s?id="), ("deny", "/*.pdf$")]
+        )
+        assert kept == {"/s", "/c.pdf?v=2"}
+
+    def test_glob_edges(self, spark):
+        cases = [
+            ("/a*$", ["/a", "/ab", "/b"], {"/b"}),  # '*$' anchors nothing
+            ("/a$", ["/a", "/ab"], {"/ab"}),  # '$' alone: exact path
+            ("*/cache", ["/x/cache/y", "/cache", "/cach"], {"/cach"}),
+            ("/a**b", ["/ab", "/axb", "/ba"], {"/ba"}),
+            # head and tail may not overlap: /ab*ba$ needs at least /abba
+            ("/ab*ba$", ["/aba", "/abba", "/abxba"], {"/aba"}),
+            ("/a*b*c$", ["/abc", "/acbc", "/acb", "/abcx"], {"/acb", "/abcx"}),
+        ]
+        for pattern, paths, expected in cases:
+            assert self._kept(spark, paths, [("deny", pattern)]) == expected, pattern
+
+    def test_glob_matches_reference(self, spark):
+        """Random patterns over a small alphabet against a Python regex
+        translation of RFC 9309 ('*' → '.*', a trailing '$' → end)."""
+        import random
+        import re
+
+        rng = random.Random(7)
+        pairs = []
+        for i in range(300):
+            pattern = rng.choice("/*") + "".join(
+                rng.choice("ab/.?*") for _ in range(rng.randint(0, 5))
+            )
+            if rng.random() < 0.4:
+                pattern += "$"
+            path = "/" + "".join(rng.choice("ab/.?") for _ in range(rng.randint(0, 7)))
+            pairs.append((f"h{i}.com", pattern, path))
+
+        def ref(pattern, path):
+            anchored = pattern.endswith("$")
+            body = pattern[:-1] if anchored else pattern
+            rx = ".*".join(re.escape(x) for x in body.split("*"))
+            return re.match(rx + ("$" if anchored else ""), path) is not None
+
+        f = spark.createDataFrame(
+            [(f"http://{h}{p}", h, 1.0) for h, _, p in pairs],
+            "canon_url string, host string, priority double",
+        )
+        rules = spark.createDataFrame(
+            [(h, "deny", pat) for h, pat, _ in pairs],
+            "host string, rule_type string, path_prefix string",
+        )
+        kept = {r["host"] for r in frontier.apply_robots(f, rules).collect()}
+        expected = {h for h, pat, p in pairs if not ref(pat, p)}
+        assert kept == expected
+
+    def test_many_star_rule_is_fast(self, spark):
+        """A hostile rule with many stars on a long path that does not
+        match: a backtracking regex of it does not finish in minutes; the
+        segment search does at most path × pattern length work."""
+        import time
+
+        hostile = "/" + "*a" * 16 + "*b"
+        long_miss = "/" + "a" * 20000
+        t0 = time.perf_counter()
+        kept = self._kept(
+            spark, [long_miss, long_miss + "b"], [("deny", hostile)]
+        )
+        assert kept == {long_miss}
+        assert time.perf_counter() - t0 < 60
 
     def test_no_rules_host_allowed(self, spark):
         f = self._frontier(spark, ["/x"], host="other.com")
